@@ -82,6 +82,12 @@ import graft.queries.Registry
   *     disables (the slope block then reads null).
   */
 object Bench {
+  /** `$SPARK_GRAFT_CPUS` as JSON: a number, a `[0-9*]+` string, else "invalid". */
+  private[graft] def cpusJson(cpus: String): String =
+    if (cpus.matches("[1-9][0-9]*")) cpus
+    else if (cpus.matches("[0-9*]+")) "\"" + cpus + "\""
+    else "\"invalid\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -393,9 +399,8 @@ object Bench {
     // core count AND the context's actual defaultParallelism so "applied"
     // is checkable from the line itself.
     val defaultPar = spark.sparkContext.defaultParallelism
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
     val line =
-      s"""{"sf":"$sfDir","reps":$reps,"cpus":$cpusJson,"default_parallelism":$defaultPar,"shared":$sharedJson,"sentinels":$sentinels,"slope":$slopeJson,"queries":$qs,"metric":"total","unit":"sec","slope_red":$slopeRedJson,"failed":$failed,"value":$total}"""
+      s"""{"sf":"$sfDir","reps":$reps,"cpus":${cpusJson(cpus)},"default_parallelism":$defaultPar,"shared":$sharedJson,"sentinels":$sentinels,"slope":$slopeJson,"queries":$qs,"metric":"total","unit":"sec","slope_red":$slopeRedJson,"failed":$failed,"value":$total}"""
     println(line)
     val outDir = sys.env.get("SPARK_GRAFT_OUT").filter(_.nonEmpty)
     val outPath = Paths.get(outDir.getOrElse("."), "bench.json")

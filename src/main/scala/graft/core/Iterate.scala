@@ -65,10 +65,10 @@ final case class IterationResult[M](
   * (GuaguaMasterService.run, guagua-core/.../master/GuaguaMasterService.java:185-215)
   * rebuilt on Spark primitives:
   *
-  *   - worker compute  ≙ `rdd.mapPartitions` (one result per partition);
-  *   - combinable path ≙ `treeReduce` (executor-side partial merge — the
-  *     reference's eager combiner, NettyMasterCoordinator.java:157-236, plus
-  *     tree levels it never had);
+  *   - worker compute  ≙ one `sc.runJob` per iteration (one result per partition);
+  *   - combinable path ≙ a driver fold in partition order, so reruns are
+  *     bit-identical (the reference's master-side eager combiner,
+  *     NettyMasterCoordinator.java:157-236, also has no tree);
   *   - master→worker broadcast ≙ `sparkContext.broadcast` per iteration
   *     (replaces ZooKeeper znode chunking, BasicCoordinator.java:304-346);
   *   - barrier ≙ the Spark stage boundary; straggler handling is the
@@ -80,11 +80,11 @@ final case class IterationResult[M](
   *     restart (AbstractMasterCoordinator.java:194-238 semantics).
   *
   * Scale notes (100 TB / 1000 executors): the only data movement per
-  * iteration is |partitions| worker results to the driver (tree-combined when
-  * a combiner exists, so driver receives O(1) results of size |W|) and one
-  * broadcast of M back out (BitTorrent-style torrent broadcast, no 1 MB znode
-  * chunking limit). The input is scanned from cluster-local cache
-  * (MEMORY_AND_DISK), never reshuffled across iterations.
+  * iteration is |partitions| worker results to the driver (partitions × |W|
+  * of driver memory, like the reference's master) and one broadcast of M
+  * back out (BitTorrent-style torrent broadcast, no 1 MB znode chunking
+  * limit). The input is scanned from cluster-local cache (MEMORY_AND_DISK),
+  * never reshuffled across iterations.
   */
 object Iterate {
 
@@ -122,7 +122,7 @@ object Iterate {
     *   reference's master result buffer, NettyMasterCoordinator.java:157-236);
     *   with a combiner they are folded as they are consumed, so memory stays
     *   bounded by |W| × partitions only in the non-combinable case — the
-    *   same bound the full-barrier collect path has.
+    *   bound the full barrier has on both paths.
     * @param minWorkersTimeout the quorum window (`guagua.min.workers.timeout`,
     *   default 60 s in the reference) — before it elapses the master waits
     *   for everyone regardless of the ratio.
@@ -136,7 +136,6 @@ object Iterate {
       combine: Option[(W, W) => W] = None,
       listeners: Seq[IterationListener[M]] = Nil,
       checkpointDir: Option[String] = None,
-      treeDepth: Int = 2,
       workerTimeout: Option[scala.concurrent.duration.FiniteDuration] = None,
       workerTimeoutSoft: Boolean = true,
       minWorkersRatio: Double = 1.0,
@@ -157,7 +156,7 @@ object Iterate {
       else data.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // Zero input is a hard error in the reference too
     // (AbstractWorkerComputable.java:87-90); fail with a message instead of
-    // letting treeReduce throw "empty collection" on a partition-less RDD.
+    // handing the master an empty iteration on a partition-less RDD.
     require(cached.getNumPartitions > 0,
       "Iterate.run: input Dataset has no partitions (empty input?)")
 
@@ -253,33 +252,18 @@ object Iterate {
               quorumIteration(sc, cached, partCompute, master, combine, bc.value,
                 ctx, numParts, effectiveRatio, minWorkersTimeout)
             } else {
-              val workerResults: RDD[W] =
-                cached.mapPartitions(p => partCompute(p).iterator)
+              // Full barrier: one job; results come back by partition index,
+              // so the fold order never depends on task completion order.
+              val results = sc.runJob(cached, partCompute)
               combine match {
                 case Some(c) =>
-                  // Combinable path: partial merges run on executors and at
-                  // intermediate tree levels, so the driver folds O(1) results
-                  // no matter how many partitions exist — this is what makes
-                  // the kernel safe at 10^5 partitions where collect() would
-                  // not be.
-                  val reduced =
-                    try workerResults.treeReduce(c, treeDepth)
-                    catch {
-                      // Empty result RDD is only possible when soft timeouts
-                      // dropped every partition; without them, let user-code
-                      // exceptions (which may legitimately be UOE) surface
-                      // unchanged.
-                      case _: UnsupportedOperationException
-                          if workerTimeout.isDefined && workerTimeoutSoft =>
-                        throw new IllegalStateException(
-                          "no worker results this iteration (all partitions timed out?)")
-                    }
+                  // Only soft timeouts can leave a partition without a result.
+                  val reduced = results.iterator.flatten.reduceOption(c).getOrElse(
+                    throw new IllegalStateException(
+                      "no worker results this iteration (all partitions timed out?)"))
                   master.compute(Iterator.single(reduced), bc.value, ctx)
                 case None =>
-                  // Non-combinable masters see every per-partition result,
-                  // streamed off the collected array (bounded by partitions ×
-                  // |W|; same bound the reference has, SURVEY §7.4).
-                  master.compute(workerResults.collect().iterator, bc.value, ctx)
+                  master.compute(results.iterator.flatten, bc.value, ctx)
               }
             }
           } finally bc.destroy()
@@ -315,7 +299,7 @@ object Iterate {
     *
     * With a combiner, the waiting driver thread drains arrivals into one
     * running accumulator (arrival order — the combiner must be
-    * associative+commutative, the same contract treeReduce imposes), so
+    * associative+commutative, and float folds are not reproducible), so
     * steady-state driver memory is O(|W|); the result handler itself only
     * enqueues — Spark invokes it on the DAG scheduler's event loop, where
     * user combine code would stall all job scheduling on the context.

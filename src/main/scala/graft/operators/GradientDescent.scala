@@ -24,9 +24,9 @@ import graft.core._
   *                 LogisticRegressionMaster.java:44-45; we reproduce that
   *                 default and expose `averageGradient` to fix it).
   *
-  * Worker results are combinable (element-wise add), so the kernel
-  * tree-reduces them on executors: at 10^4 partitions the driver receives a
-  * single (dims+2)-double result, not 10^4 of them.
+  * Worker results are combinable (element-wise add): the driver adds the
+  * partitions' (dims+2)-double results in partition order, so the master
+  * sees one sum and reruns are bit-identical.
   */
 object GradientDescent {
 

@@ -32,7 +32,7 @@ object IterativeSum {
       workerResults.sum
   }
 
-  /** Run the loop; combine is `+` so worker results tree-reduce on executors
+  /** Run the loop; combine is `+`, folded on the driver in partition order
     * (the reference's Combinable path, io/Combinable.java:24-31).
     */
   def run(

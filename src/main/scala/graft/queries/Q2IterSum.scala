@@ -13,7 +13,7 @@ import graft.operators.IterativeSum
   * The recurrence s_i = P·s_{i-1} + X has the closed form
   * s_N = X·(P^N − 1)/(P − 1) = X·341, which is what the SQL oracle computes —
   * so the oracle independently cross-checks the kernel's loop, broadcast and
-  * tree-combine plumbing, not just arithmetic.
+  * partition-order combine plumbing, not just arithmetic.
   *
   * Floats are avoided entirely (floor → BIGINT before summing) because the
   * ×341 amplification would magnify any summation-order ulp difference.

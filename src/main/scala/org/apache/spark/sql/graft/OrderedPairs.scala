@@ -35,6 +35,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * Null/short-input semantics: null input or fewer than 2 ids yields an
   * EMPTY array, never null — a key held by one document pairs with nothing,
   * exactly as the self-join drops it.
+  * Lists over [[OrderedPairs.MaxIds]] ids (callers cap at maxDf = 50) fail
+  * the task: n(n−1)/2 rows per input row would overflow Int past n = 46 341.
   */
 case class OrderedPairs(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes with Serializable {
@@ -76,11 +78,16 @@ object OrderedPairs {
       StructField("b", LongType, nullable = false))),
     containsNull = false)
 
+  /** Longest id list [[compute]] accepts: 523 776 pairs at most. */
+  val MaxIds = 1024
+
   private val emptyArr: ArrayData = new GenericArrayData(Array.empty[Any])
   def empty(): ArrayData = emptyArr
 
   def compute(in: ArrayData): ArrayData = {
     val n = in.numElements()
+    require(n <= MaxIds,
+      s"ordered_pairs: $n ids exceed the cap of $MaxIds (${n.toLong * (n - 1) / 2} pairs)")
     if (n < 2) return emptyArr
     val ids = in.toLongArray()
     java.util.Arrays.sort(ids)

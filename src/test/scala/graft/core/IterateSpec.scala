@@ -3,11 +3,13 @@ package graft.core
 import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Random
 
+import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.IterativeSum
+import graft.operators.{IterativeSum, NeuralNet}
 
 class IterateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -149,5 +151,41 @@ class IterateSpec extends AnyFunSuite {
     Iterate.run[Long, Long, Long](
       sumFixture, new IterativeSum.SumWorker, countingMaster, maxIterations = 1)
     assert(seen == 2)
+  }
+
+  test("combiner folds worker results in partition order, every iteration") {
+    val data = spark.createDataset(spark.sparkContext.parallelize(1L to 40L, 4))
+    val worker = new WorkerComputable[Long, Int, Vector[Int]] {
+      def compute(records: Iterator[Long], last: Option[Int], ctx: IterationContext): Vector[Int] =
+        Vector(TaskContext.getPartitionId())
+    }
+    val seen = ArrayBuffer.empty[Vector[Int]]
+    val master = new MasterComputable[Int, Vector[Int]] {
+      def compute(ws: Iterator[Vector[Int]], last: Option[Int], ctx: IterationContext): Int = {
+        ws.foreach(seen += _)
+        ctx.currentIteration
+      }
+    }
+    Iterate.run[Long, Int, Vector[Int]](
+      data, worker, master, maxIterations = 20, combine = Some(_ ++ _))
+    assert(seen.size == 20)
+    seen.foreach(v => assert(v == Vector(0, 1, 2, 3)))
+  }
+
+  test("NeuralNet.train twice on the same 4-partition input gives bit-identical weights") {
+    // Floating-point gradient sums depend on merge order, so identical
+    // weights pin the fold order, not just the arithmetic.
+    val rnd = new Random(3)
+    val samples = (0 until 400).map { i =>
+      NeuralNet.Sample(Array.fill(3)(rnd.nextGaussian()), rnd.nextInt(2).toDouble, i.toLong)
+    }
+    val data = spark.createDataset(spark.sparkContext.parallelize(samples, 4)).persist()
+    try {
+      def weightBits = NeuralNet.train(data, NeuralNet.Layers(Seq(3, 5, 1)),
+        iterations = 30, learnRate = 0.1, seed = 11L)
+        .master.weights.map(java.lang.Double.doubleToRawLongBits).toSeq
+      val first = weightBits
+      assert(weightBits == first)
+    } finally data.unpersist()
   }
 }

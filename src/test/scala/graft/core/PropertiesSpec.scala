@@ -8,10 +8,11 @@ import graft.operators.IterativeSum
 import graft.operators.NeuralNet.NNGrad
 
 /** The properties the reference's `Combinable` contract assumes but never
-  * tests (SURVEY §5): every combiner handed to treeReduce must be
-  * associative (tree shape is scheduler-dependent) and, because partial
-  * results arrive in arbitrary order, commutative up to floating-point
-  * reassociation (exact on longs; tolerant on doubles).
+  * tests (SURVEY §5): every combiner handed to the kernel must be
+  * associative and commutative up to floating-point reassociation (exact on
+  * longs; tolerant on doubles). The full barrier folds in partition order,
+  * so it only needs associativity; the quorum barrier folds in arrival
+  * order, which also needs commutativity.
   */
 object CombinerProperties extends Properties("combiners") {
 

@@ -1,7 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.OrderedPairs
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
@@ -79,5 +85,23 @@ class OrderedPairsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     pairs.foreach { case (a, b) => assert(a < b) }
+  }
+
+  test("id lists past MaxIds fail loudly on the interpreted and the codegen path") {
+    val expr = OrderedPairs(BoundReference(0, ArrayType(LongType), nullable = true))
+    val codegen = GenerateUnsafeProjection.generate(Seq(expr))
+    def ids(n: Int) = InternalRow(new GenericArrayData((0 until n).map(i => i.toLong: Any).toArray))
+    val cap = OrderedPairs.MaxIds
+    assert(cap >= 50, "the cap must admit the callers' maxDf = 50 lists")
+    // At the cap: every pair, on both paths.
+    val pairs = cap * (cap - 1) / 2
+    assert(expr.eval(ids(cap)).asInstanceOf[GenericArrayData].numElements() == pairs)
+    assert(codegen(ids(cap)).getArray(0).numElements() == pairs)
+    // One past the cap: a named failure, not an overflow or an O(n²) array.
+    val interpreted = intercept[IllegalArgumentException](expr.eval(ids(cap + 1)))
+    assert(interpreted.getMessage.contains(s"cap of $cap"))
+    val generated = intercept[IllegalArgumentException](codegen(ids(cap + 1)))
+    assert(generated.getMessage.contains(s"cap of $cap"))
+    assert(codegen.getClass.getName.contains("SpecificUnsafeProjection"))
   }
 }
