@@ -88,6 +88,26 @@ object Bench {
     else if (cpus.matches("[0-9*]+")) "\"" + cpus + "\""
     else "\"invalid\""
 
+  /** `s` as a JSON string literal, escaped by Spark's bundled Jackson: only
+    * quote, backslash and control characters change, so plain names and
+    * paths read exactly as before.
+    */
+  private[graft] def jsonString(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
+  /** The slope block of the bench line (see [[benchLine]]). */
+  private[graft] def slopeBlock(small: String, dataRatio: Double, threshold: Double,
+      queries: String): String =
+    s"""{"small_sf":${jsonString(small)},"data_ratio":$dataRatio,"threshold":$threshold,"queries":$queries}"""
+
+  /** The one JSON line; every argument but the strings is already JSON.
+    * Key order: see the note at its call in [[main]].
+    */
+  private[graft] def benchLine(sfDir: String, reps: Int, cpus: String, defaultPar: Int,
+      shared: String, sentinels: String, slope: String, queries: String, slopeRed: String,
+      failed: String, total: Double): String =
+    s"""{"sf":${jsonString(sfDir)},"reps":$reps,"cpus":${cpusJson(cpus)},"default_parallelism":$defaultPar,"shared":$shared,"sentinels":$sentinels,"slope":$slope,"queries":$queries,"metric":"total","unit":"sec","slope_red":$slopeRed,"failed":$failed,"value":$total}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -321,17 +341,16 @@ object Bench {
         }
       }
       val table = rows.map { case (n, s, b, r, red) =>
-        f""""$n":{"small":$s%.3f,"big":$b%.3f,"ratio":$r%.2f,"red":$red}"""
+        f"""${jsonString(n)}:{"small":$s%.3f,"big":$b%.3f,"ratio":$r%.2f,"red":$red}"""
       }.mkString("{", ",", "}")
-      val red = rows.collect { case (n, _, _, _, true) => "\"" + n + "\"" }
+      val red = rows.collect { case (n, _, _, _, true) => jsonString(n) }
         .mkString("[", ",", "]")
-      (s"""{"small_sf":"$small","data_ratio":$dataRatio,"threshold":$threshold,"queries":$table}""",
-        red)
+      (slopeBlock(small, dataRatio, threshold, table), red)
     }).getOrElse(("null", "[]"))
     val qs = results
-      .map { case (k, v) => "\"" + k + "\":" + v.map(_.toString).getOrElse("null") }
+      .map { case (k, v) => jsonString(k) + ":" + v.map(_.toString).getOrElse("null") }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, None) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val failed = results.collect { case (k, None) => jsonString(k) }.mkString("[", ",", "]")
     // Shared-stage build costs for the MEASURED dir (builds for the warmup
     // and slope dirs are untimed harness work, like their query execs).
     // The headline total includes them: under sharing the per-query minima
@@ -355,7 +374,7 @@ object Bench {
       if (!shared) """{"enabled":false}"""
       else {
         val b = sharedBuilds.toSeq.sortBy(_._1)
-          .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+          .map { case (k, v) => f"""${jsonString(k)}:$v%.3f""" }.mkString("{", ",", "}")
         f"""{"enabled":true,"builds":$b,"build_total":$sharedTotal%.3f}"""
       }
     val total = results.flatMap(_._2).sum + sharedTotal
@@ -383,7 +402,7 @@ object Bench {
       for {
         m <- timesByQuery.get(n).filter(_ => !failedSet(n)).map(_.min)
         b <- baseRows.get(n)
-      } yield f""""$n":{"sec":$m,"baseline":$b,"ratio":${m / b}%.3f}"""
+      } yield f"""${jsonString(n)}:{"sec":$m,"baseline":$b,"ratio":${m / b}%.3f}"""
     }.mkString("{", ",", "}")
     // Key order is deliberate (round 15, VERDICT r14 #4): the driver
     // captures only the final 2 kB of stdout, and this line exceeds 2 kB
@@ -399,8 +418,8 @@ object Bench {
     // core count AND the context's actual defaultParallelism so "applied"
     // is checkable from the line itself.
     val defaultPar = spark.sparkContext.defaultParallelism
-    val line =
-      s"""{"sf":"$sfDir","reps":$reps,"cpus":${cpusJson(cpus)},"default_parallelism":$defaultPar,"shared":$sharedJson,"sentinels":$sentinels,"slope":$slopeJson,"queries":$qs,"metric":"total","unit":"sec","slope_red":$slopeRedJson,"failed":$failed,"value":$total}"""
+    val line = benchLine(sfDir, reps, cpus, defaultPar, sharedJson, sentinels, slopeJson, qs,
+      slopeRedJson, failed, total)
     println(line)
     val outDir = sys.env.get("SPARK_GRAFT_OUT").filter(_.nonEmpty)
     val outPath = Paths.get(outDir.getOrElse("."), "bench.json")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
@@ -254,7 +255,10 @@ object Iterate {
             } else {
               // Full barrier: one job; results come back by partition index,
               // so the fold order never depends on task completion order.
-              val results = sc.runJob(cached, partCompute)
+              // The (TaskContext, Iterator) overload cleans the closure once;
+              // the Iterator-only one wraps it and cleans it a second time.
+              val results = sc.runJob(cached,
+                (_: TaskContext, it: Iterator[T]) => partCompute(it), 0 until numParts)
               combine match {
                 case Some(c) =>
                   // Only soft timeouts can leave a partition without a result.

@@ -31,6 +31,11 @@ import graft.core._
   * matching the reference's default network shape (input → hidden → output,
   * NNMaster.java:127-149). Weights layout: layer l maps in(l)+1 inputs
   * (bias last) to out(l) units.
+  *
+  * All of the arithmetic lives in one [[NeuralNet.Kernel]], built once per
+  * worker compute call; it allocates nothing per sample and is bit-identical
+  * to a plain per-sample forward/backprop loop (see its contract), so
+  * weights depend only on the input and its partitioning.
   */
 object NeuralNet {
 
@@ -68,84 +73,129 @@ object NeuralNet {
 
   private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
+  /** The worker's arithmetic: forward pass and backprop for one network
+    * and one weight vector, built once per [[Worker]] compute call and then
+    * run per sample without allocating. It holds the layer sizes and weight
+    * offsets as arrays, plus one activation and one delta buffer per layer,
+    * so a kernel is single-threaded and its [[activations]] are overwritten
+    * by the next sample.
+    *
+    * Bit-identity contract: every floating-point operation happens in the
+    * same order as in a plain loop that computes one unit at a time into
+    * fresh arrays per sample (NeuralNetKernelSpec keeps that loop as its
+    * reference), so gradients, errors and trained weights match it bit for
+    * bit: each `z` starts at the unit's bias and adds `w·a` in input order,
+    * and backprop keeps the `(unit, input)` update order. The kernel skips
+    * only layer 0's input deltas, which nothing reads.
+    */
+  private[operators] final class Kernel(layers: Layers, w: Array[Double]) {
+    require(w.length == layers.nWeights,
+      s"weights: ${w.length} values for a network of ${layers.nWeights}")
+    private val sizes: Array[Int] = layers.sizes.toArray
+    private val nLayers = sizes.length - 1
+    private val offs: Array[Int] =
+      sizes.sliding(2).map(p => (p(0) + 1) * p(1)).scanLeft(0)(_ + _).toArray
+    /** Per-layer activations of the last sample; `activations(0)` is its input. */
+    private[operators] val activations: Array[Array[Double]] =
+      Array.tabulate(sizes.length)(l => new Array[Double](if (l == 0) 0 else sizes(l)))
+    private val deltas: Array[Array[Double]] =
+      Array.tabulate(sizes.length)(l => new Array[Double](if (l == 0) 0 else sizes(l)))
+
+    /** Forward pass; returns the output layer's activations. */
+    def forward(x: Array[Double]): Array[Double] = {
+      activations(0) = x
+      var l = 0
+      while (l < nLayers) { forwardLayer(l); l += 1 }
+      activations(nLayers)
+    }
+
+    private def forwardLayer(l: Int): Unit = {
+      val in = sizes(l)
+      val out = sizes(l + 1)
+      val a = activations(l)
+      val o = activations(l + 1)
+      var j = 0
+      while (j < out) {
+        val r = offs(l) + j * (in + 1)
+        var z = w(r + in) // bias
+        var i = 0
+        while (i < in) { z += w(r + i) * a(i); i += 1 }
+        o(j) = sigmoid(z)
+        j += 1
+      }
+    }
+
+    /** Loss of one sample without training on it. */
+    def error(s: Sample): Double = {
+      val out = forward(s.features)
+      var err = 0.0
+      var j = 0
+      while (j < out.length) { val e = out(j) - s.label; err += e * e / 2; j += 1 }
+      err
+    }
+
+    /** Backprop for one sample; accumulates d(loss)/dw into `grad` and
+      * returns the sample's loss. Loss = Σ (y − a)² / 2 (the reference's
+      * error accumulation shape, NNWorker error += err²/2 like its LR
+      * sibling); a single-output label is broadcast to each output unit.
+      */
+    def backprop(s: Sample, grad: Array[Double]): Double = {
+      val out = forward(s.features)
+      val dOut = deltas(nLayers)
+      var err = 0.0
+      var j = 0
+      while (j < out.length) {
+        val e = out(j) - s.label
+        err += e * e / 2
+        dOut(j) = e * out(j) * (1 - out(j))
+        j += 1
+      }
+      var l = nLayers - 1
+      while (l >= 0) {
+        val in = sizes(l)
+        val outN = sizes(l + 1)
+        val prev = activations(l)
+        val delta = deltas(l + 1)
+        val next = deltas(l)
+        val hasNext = l > 0 // layer 0's input deltas are never read
+        if (hasNext) java.util.Arrays.fill(next, 0.0)
+        var jj = 0
+        while (jj < outN) {
+          val rowOff = offs(l) + jj * (in + 1)
+          val d = delta(jj)
+          var i = 0
+          while (i < in) {
+            grad(rowOff + i) += d * prev(i)
+            if (hasNext) next(i) += d * w(rowOff + i)
+            i += 1
+          }
+          grad(rowOff + in) += d // bias
+          jj += 1
+        }
+        if (hasNext) {
+          var i = 0
+          while (i < in) { next(i) *= prev(i) * (1 - prev(i)); i += 1 }
+        }
+        l -= 1
+      }
+      err
+    }
+  }
+
   /** Forward pass; returns per-layer activations (a(0) = input). */
   private[operators] def forward(layers: Layers, w: Array[Double], x: Array[Double])
       : Array[Array[Double]] = {
-    val acts = new Array[Array[Double]](layers.sizes.length)
-    acts(0) = x
-    var off = 0
-    var l = 0
-    while (l < layers.sizes.length - 1) {
-      val in = layers.sizes(l)
-      val out = layers.sizes(l + 1)
-      val a = new Array[Double](out)
-      var j = 0
-      while (j < out) {
-        var z = w(off + j * (in + 1) + in) // bias
-        var i = 0
-        while (i < in) { z += w(off + j * (in + 1) + i) * acts(l)(i); i += 1 }
-        a(j) = sigmoid(z)
-        j += 1
-      }
-      acts(l + 1) = a
-      off += (in + 1) * out
-      l += 1
-    }
-    acts
+    val k = new Kernel(layers, w)
+    k.forward(x)
+    k.activations
   }
 
-  /** Backprop for one sample; accumulates d(loss)/dw into `grad`.
-    * Loss = Σ (y − a)² / 2 (the reference's error accumulation shape,
-    * NNWorker error += err²/2 like its LR sibling).
+  /** Backprop for one sample; accumulates d(loss)/dw into `grad` and
+    * returns the sample's loss (see [[Kernel.backprop]]).
     */
   private[operators] def backprop(
-      layers: Layers, w: Array[Double], s: Sample, grad: Array[Double]): Double = {
-    val acts = forward(layers, w, s.features)
-    val L = layers.sizes.length - 1
-    val out = acts(L)
-    var delta = new Array[Double](out.length)
-    var err = 0.0
-    var j = 0
-    while (j < out.length) {
-      val e = out(j) - s.label // single-output label broadcast to each unit
-      err += e * e / 2
-      delta(j) = e * out(j) * (1 - out(j))
-      j += 1
-    }
-    // layer offsets
-    val offs = new Array[Int](L)
-    var acc = 0
-    var l = 0
-    while (l < L) {
-      offs(l) = acc; acc += (layers.sizes(l) + 1) * layers.sizes(l + 1); l += 1
-    }
-    l = L - 1
-    while (l >= 0) {
-      val in = layers.sizes(l)
-      val outN = layers.sizes(l + 1)
-      val prev = acts(l)
-      val nextDelta = new Array[Double](in)
-      var jj = 0
-      while (jj < outN) {
-        val rowOff = offs(l) + jj * (in + 1)
-        var i = 0
-        while (i < in) {
-          grad(rowOff + i) += delta(jj) * prev(i)
-          nextDelta(i) += delta(jj) * w(rowOff + i)
-          i += 1
-        }
-        grad(rowOff + in) += delta(jj) // bias
-        jj += 1
-      }
-      if (l > 0) {
-        var i = 0
-        while (i < in) { nextDelta(i) *= prev(i) * (1 - prev(i)); i += 1 }
-      }
-      delta = nextDelta
-      l -= 1
-    }
-    err
-  }
+      layers: Layers, w: Array[Double], s: Sample, grad: Array[Double]): Double =
+    new Kernel(layers, w).backprop(s, grad)
 
   /** Deterministic train/test membership (SURVEY Q10 semantics). */
   def isTrain(splitKey: Long): Boolean =
@@ -156,6 +206,7 @@ object NeuralNet {
         ctx: IterationContext): NNGrad = last match {
       case None => NNGrad(Array.empty, 0.0, 0.0, 0L, 0L)
       case Some(st) =>
+        val kernel = new Kernel(layers, st.weights)
         val grad = new Array[Double](st.weights.length)
         var trainErr = 0.0
         var testErr = 0.0
@@ -164,14 +215,10 @@ object NeuralNet {
         while (records.hasNext) {
           val s = records.next()
           if (isTrain(s.splitKey)) {
-            trainErr += backprop(layers, st.weights, s, grad)
+            trainErr += kernel.backprop(s, grad)
             nTrain += 1
           } else {
-            val out = forward(layers, st.weights, s.features).last
-            var e = 0.0
-            var j = 0
-            while (j < out.length) { val d = out(j) - s.label; e += d * d / 2; j += 1 }
-            testErr += e
+            testErr += kernel.error(s)
             nTest += 1
           }
         }

@@ -3,7 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -33,6 +34,32 @@ import org.apache.spark.storage.StorageLevel
   * the last buffer state.
   */
 object PersistedTruncate {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.PersistedTruncate")
+
+  /** The partitioning and ordering the new leaf may claim over `output`.
+    * `truncate` binds the physical plan's claim to the analyzed output
+    * without the attribute rewrite `LogicalRDD.fromDataset` performs, so a
+    * claim naming an attribute outside `output` (exprIds that drifted
+    * between analysis and execution) would dangle and silently stop the
+    * planner from reusing the partitioning. Such a claim degrades loudly to
+    * `UnknownPartitioning` with no ordering.
+    */
+  private[graft] def claim(partitioning: Partitioning, ordering: Seq[SortOrder],
+      output: Seq[Attribute]): (Partitioning, Seq[SortOrder]) = {
+    val partitionRefs = partitioning match {
+      case e: Expression => e.references
+      case _ => AttributeSet.empty
+    }
+    val refs = ordering.foldLeft(partitionRefs)(_ ++ _.references)
+    if (refs.subsetOf(AttributeSet(output))) (partitioning, ordering)
+    else {
+      log.warn(s"claimed partitioning $partitioning / ordering ${ordering.mkString(", ")} " +
+        s"references attributes outside the output ${output.mkString(", ")}; " +
+        "advertising UnknownPartitioning instead")
+      (UnknownPartitioning(partitioning.numPartitions), Nil)
+    }
+  }
 
   /** Execute `df`, persist its rows at `level`, and return a DataFrame over
     * the persisted RDD that still advertises the plan's output partitioning
@@ -73,11 +100,14 @@ object PersistedTruncate {
       case c: PartitioningCollection => firstLeaf(c.partitionings.head)
       case other => other
     }
+    val output = ds.logicalPlan.output
+    val (partitioning, ordering) =
+      claim(firstLeaf(finalPlan.outputPartitioning), finalPlan.outputOrdering, output)
     val logical = LogicalRDD(
-      ds.logicalPlan.output,
+      output,
       internal,
-      firstLeaf(finalPlan.outputPartitioning),
-      finalPlan.outputOrdering,
+      partitioning,
+      ordering,
       isStreaming = false,
       stream = None)(spark, None, None)
     (org.apache.spark.sql.classic.Dataset.ofRows(spark, logical), internal)

@@ -1,0 +1,48 @@
+package graft.core
+
+import scala.collection.mutable
+
+import org.apache.spark.{SparkException, TaskContext}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** Sums its partition, except that partition 1 throws in iteration 3. */
+private class FailingWorker extends WorkerComputable[Long, Long, Long] {
+  def compute(records: Iterator[Long], last: Option[Long], ctx: IterationContext): Long = {
+    if (ctx.currentIteration == 3 && TaskContext.getPartitionId() == 1)
+      throw new IllegalStateException("injected failure: iteration 3, partition 1")
+    records.sum
+  }
+}
+
+/** What a run does when a worker task fails mid-run. The shared test session
+  * is `local[4]`, which gives every task one attempt, so the first failure
+  * fails the job. The retry-and-recover case needs a `local[N,F]` master.
+  */
+class IterateFailureSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  test("a worker that throws fails the run with its message and releases the persisted input") {
+    val sc = spark.sparkContext
+    val ds = spark.range(0L, 400L, 1L, 4).as[Long]
+    // Dataset.rdd is a lazy val, so this is the RDD Iterate.run persists.
+    val input = ds.rdd.id
+    val persisted = mutable.Buffer.empty[Boolean]
+    val watch = new IterationListener[Long] {
+      override def onIterationEnd(iteration: Int, master: Long, elapsedMillis: Long): Unit =
+        persisted += sc.getPersistentRDDs.contains(input)
+    }
+    val e = intercept[SparkException] {
+      Iterate.run[Long, Long, Long](
+        ds, new FailingWorker, TimeoutSumMaster, maxIterations = 5,
+        combine = Some(_ + _), listeners = Seq(watch))
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("injected failure: iteration 3, partition 1")))
+    assert(persisted == Seq(true, true), "input persisted through iterations 1-2")
+    assert(!sc.getPersistentRDDs.contains(input), "input still persisted after the failure")
+  }
+}
