@@ -2,9 +2,11 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration.{Duration, FiniteDuration}
 import scala.reflect.ClassTag
+import scala.util.{Failure, Success}
 
-import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
@@ -66,16 +68,20 @@ final case class IterationResult[M](
   * (GuaguaMasterService.run, guagua-core/.../master/GuaguaMasterService.java:185-215)
   * rebuilt on Spark primitives:
   *
-  *   - worker compute  ≙ one `sc.runJob` per iteration (one result per partition);
+  *   - worker compute  ≙ one Spark job per iteration (one result per
+  *     partition), in both barrier modes;
   *   - combinable path ≙ a driver fold in partition order, so reruns are
   *     bit-identical (the reference's master-side eager combiner,
   *     NettyMasterCoordinator.java:157-236, also has no tree);
   *   - master→worker broadcast ≙ `sparkContext.broadcast` per iteration
   *     (replaces ZooKeeper znode chunking, BasicCoordinator.java:304-346);
-  *   - barrier ≙ the Spark stage boundary; straggler handling is the
-  *     scheduler's (speculation-safe because workers are pure functions of
-  *     (partition, lastMaster) — unlike the reference, which had to disable
-  *     speculative execution, GuaguaMapReduceClient.java:429-433);
+  *   - barrier ≙ one quorum test per iteration, like the reference's
+  *     `isTerminated(done, workers, ratio, timeout)`
+  *     (BasicCoordinator.java:649-658): the full barrier is the quorum
+  *     barrier at ratio 1.0, i.e. the job's end. Straggler handling is
+  *     otherwise the scheduler's (speculation-safe because workers are pure
+  *     functions of (partition, lastMaster) — unlike the reference, which had
+  *     to disable speculative execution, GuaguaMapReduceClient.java:429-433);
   *   - fail-over ≙ RDD lineage/task retry within a job, plus optional
   *     per-iteration driver checkpointing of the master state for cross-job
   *     restart (AbstractMasterCoordinator.java:194-238 semantics).
@@ -119,11 +125,10 @@ object Iterate {
     *   the stragglers (whose partitions contribute nothing this iteration —
     *   same semantics as the reference dropping unreported workers). Forced
     *   to 1.0 when partitions ≤ [[SmallWorkerCount]], like the reference.
-    *   Quorum mode consumes results incrementally on the driver (the
-    *   reference's master result buffer, NettyMasterCoordinator.java:157-236);
-    *   with a combiner they are folded as they are consumed, so memory stays
-    *   bounded by |W| × partitions only in the non-combinable case — the
-    *   bound the full barrier has on both paths.
+    *   Both modes fold the results that arrived in partition order, so the
+    *   combiner only needs to be associative; the driver holds up to
+    *   |W| × partitions per iteration, with or without a combiner (the
+    *   reference's master result buffer, NettyMasterCoordinator.java:157-236).
     * @param minWorkersTimeout the quorum window (`guagua.min.workers.timeout`,
     *   default 60 s in the reference) — before it elapses the master waits
     *   for everyone regardless of the ratio.
@@ -155,37 +160,38 @@ object Iterate {
     val cached: RDD[T] =
       if (data.storageLevel != StorageLevel.NONE) data.rdd
       else data.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // Zero input is a hard error in the reference too
-    // (AbstractWorkerComputable.java:87-90); fail with a message instead of
-    // handing the master an empty iteration on a partition-less RDD.
-    require(cached.getNumPartitions > 0,
-      "Iterate.run: input Dataset has no partitions (empty input?)")
 
     val t0 = System.nanoTime()
-    listeners.foreach(_.onStart(effMaxIterations))
-
-    // Cross-job restart: resume from the last checkpointed master state
-    // (fail-over semantics of AbstractMasterCoordinator.java:194-238).
     var lastMaster: Option[M] = None
-    var startIteration = 1
-    checkpointDir.foreach { dir =>
-      Checkpoint.restore[M](dir).foreach { case (it, m) =>
-        lastMaster = Some(m)
-        startIteration = it + 1
-      }
-    }
-
-    val numParts = cached.getNumPartitions
-    val effectiveRatio =
-      if (numParts <= SmallWorkerCount) 1.0 else math.max(0.0, math.min(1.0, minWorkersRatio))
-
-    var iteration = startIteration
     var halted = false
     var completed = 0
-    // The persisted input and per-iteration broadcasts are released even when
-    // worker/master compute throws: a failed run in a shared session must not
-    // leak executor cache or driver broadcast memory across retries.
+    // The persisted input and per-iteration broadcasts are released whenever
+    // the run fails — in a listener's onStart, in a checkpoint restore, or in
+    // worker/master compute: a failed run in a shared session must not leak
+    // executor cache or driver broadcast memory across retries.
     try {
+      // Zero input is a hard error in the reference too
+      // (AbstractWorkerComputable.java:87-90); fail with a message instead of
+      // handing the master an empty iteration on a partition-less RDD.
+      require(cached.getNumPartitions > 0,
+        "Iterate.run: input Dataset has no partitions (empty input?)")
+      listeners.foreach(_.onStart(effMaxIterations))
+
+      // Cross-job restart: resume from the last checkpointed master state
+      // (fail-over semantics of AbstractMasterCoordinator.java:194-238).
+      var iteration = 1
+      checkpointDir.foreach { dir =>
+        Checkpoint.restore[M](dir).foreach { case (it, m) =>
+          lastMaster = Some(m)
+          iteration = it + 1
+        }
+      }
+
+      val numParts = cached.getNumPartitions
+      val effectiveRatio =
+        if (numParts <= SmallWorkerCount) 1.0 else math.max(0.0, math.min(1.0, minWorkersRatio))
+      val quorum = math.max(1, math.ceil(effectiveRatio * numParts).toInt)
+
       while (iteration <= effMaxIterations && !halted) {
         val iterStart = System.nanoTime()
         listeners.foreach(_.onIterationStart(iteration))
@@ -198,8 +204,7 @@ object Iterate {
         val nextMaster: M =
           try {
             val w = worker // avoid capturing `this` in the task closure
-            // One partition's compute under the optional soft/hard budget;
-            // shared by both barrier modes below.
+            // One partition's compute under the optional soft/hard budget.
             val partCompute: Iterator[T] => Option[W] = workerTimeout match {
               case None =>
                 p => Some(w.compute(p, bc.value, ctx))
@@ -245,30 +250,17 @@ object Iterate {
                 }
             }
 
-            if (effectiveRatio < 1.0) {
-              // A7 quorum barrier: per-partition results stream to the driver
-              // as they finish (submitJob's resultHandler ≙ the reference's
-              // incremental master result buffer); after the window, proceed
-              // at quorum and cancel stragglers.
-              quorumIteration(sc, cached, partCompute, master, combine, bc.value,
-                ctx, numParts, effectiveRatio, minWorkersTimeout)
-            } else {
-              // Full barrier: one job; results come back by partition index,
-              // so the fold order never depends on task completion order.
-              // The (TaskContext, Iterator) overload cleans the closure once;
-              // the Iterator-only one wraps it and cleans it a second time.
-              val results = sc.runJob(cached,
-                (_: TaskContext, it: Iterator[T]) => partCompute(it), 0 until numParts)
-              combine match {
-                case Some(c) =>
-                  // Only soft timeouts can leave a partition without a result.
-                  val reduced = results.iterator.flatten.reduceOption(c).getOrElse(
-                    throw new IllegalStateException(
-                      "no worker results this iteration (all partitions timed out?)"))
-                  master.compute(Iterator.single(reduced), bc.value, ctx)
-                case None =>
-                  master.compute(results.iterator.flatten, bc.value, ctx)
-              }
+            val results = barrier(sc, cached, partCompute, quorum, minWorkersTimeout, iteration)
+            combine match {
+              case Some(c) =>
+                // Soft timeouts and the quorum can leave partitions without a
+                // result; with a combiner there must be at least one.
+                val reduced = results.reduceOption(c).getOrElse(
+                  throw new IllegalStateException(
+                    "no worker results this iteration (all partitions timed out?)"))
+                master.compute(Iterator.single(reduced), bc.value, ctx)
+              case None =>
+                master.compute(results, bc.value, ctx)
             }
           } finally bc.destroy()
 
@@ -294,106 +286,60 @@ object Iterate {
     result
   }
 
-  /** One iteration under the A7 quorum barrier: submit the worker job with a
-    * per-partition result handler, wait until either every partition reports
-    * or (the window elapsed AND ≥ quorum partitions reported), then cancel
-    * stragglers and fold what arrived. Partitions whose soft timeout dropped
-    * their result count toward the quorum (they reported — with nothing),
-    * exactly like the reference's null-result workers.
+  /** One iteration's barrier: run the worker job over every partition and
+    * return the results that arrived, in partition order.
     *
-    * With a combiner, the waiting driver thread drains arrivals into one
-    * running accumulator (arrival order — the combiner must be
-    * associative+commutative, and float folds are not reproducible), so
-    * steady-state driver memory is O(|W|); the result handler itself only
-    * enqueues — Spark invokes it on the DAG scheduler's event loop, where
-    * user combine code would stall all job scheduling on the context.
-    * Without a combiner, the per-partition buffer is |W| × partitions — the
-    * documented non-combinable bound.
+    * The master waits until either the job ends or (the window elapsed AND
+    * ≥ `quorum` partitions reported), then cancels the stragglers — their
+    * partitions contribute nothing this iteration, like unreported workers
+    * in the reference (NettyMasterCoordinator.java:566-704). With
+    * `quorum == partitions` that is the full barrier: the job's end, with no
+    * window and no polling. Partitions whose soft timeout dropped their
+    * result count toward the quorum (they reported — with nothing), exactly
+    * like the reference's null-result workers.
+    *
+    * The result handler only stores each result in its partition's slot:
+    * Spark invokes it on the DAG scheduler's event loop, where user code
+    * would stall all job scheduling on the context.
     *
     * A failed job (worker exception after task retries) is tolerated like a
     * straggler when the quorum is already met — the reference proceeds once
-    * the ratio is satisfied regardless of what the missing workers did —
-    * and surfaced as the iteration's failure otherwise, so the driver never
-    * spins on a quorum that can no longer be reached.
+    * the ratio is satisfied regardless of what the missing workers did — and
+    * rethrown otherwise, so the driver never waits on a quorum that can no
+    * longer be reached. Tolerated failures are LOUD: a deterministically
+    * failing partition (a data bug, not a straggler) would otherwise
+    * silently drop the same slice of data every iteration.
     */
-  private def quorumIteration[T, M, W](
+  private def barrier[T, W](
       sc: org.apache.spark.SparkContext,
       cached: RDD[T],
       partCompute: Iterator[T] => Option[W],
-      master: MasterComputable[M, W],
-      combine: Option[(W, W) => W],
-      lastMaster: Option[M],
-      ctx: IterationContext,
-      numParts: Int,
-      ratio: Double,
-      window: scala.concurrent.duration.FiniteDuration): M = {
-    val quorum = math.max(1, math.ceil(ratio * numParts).toInt)
-    // Handler side: enqueue only (cheap, non-throwing — it runs on the DAG
-    // scheduler event loop). Driver side: drain + fold while waiting.
-    val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[(Int, W)]()
+      quorum: Int,
+      window: FiniteDuration,
+      iteration: Int): Iterator[W] = {
+    val numParts = cached.getNumPartitions
+    val slots = new java.util.concurrent.atomic.AtomicReferenceArray[Option[W]](numParts)
     val reported = new java.util.concurrent.atomic.AtomicInteger(0)
     val action = sc.submitJob[T, Option[W], Unit](
       cached,
       partCompute,
       0 until numParts,
-      (idx: Int, res: Option[W]) => {
-        res.foreach(r => arrivals.add((idx, r)))
-        reported.incrementAndGet()
-        ()
-      },
+      (idx: Int, res: Option[W]) => { slots.set(idx, res); reported.incrementAndGet(); () },
       ())
-    var acc: Option[W] = None // combinable running fold (driver thread only)
-    val results = new java.util.concurrent.ConcurrentHashMap[Int, W]()
-    def drain(): Unit = {
-      var next = arrivals.poll()
-      while (next != null) {
-        combine match {
-          case Some(c) => acc = acc.map(c(_, next._2)).orElse(Some(next._2))
-          case None => results.put(next._1, next._2)
-        }
-        next = arrivals.poll()
-      }
+    // Before the window closes only the job's end releases the barrier.
+    try Await.ready(action, if (quorum == numParts) Duration.Inf else window)
+    catch { case _: TimeoutException => () }
+    while (!action.isCompleted && reported.get() < quorum) Thread.sleep(5)
+    action.value match {
+      case None => action.cancel()
+      case Some(Failure(e)) =>
+        if (reported.get() < quorum) throw e
+        log.warn(
+          s"iteration $iteration: worker job failed after ${reported.get()}/$numParts " +
+            s"partitions reported (>= quorum $quorum); proceeding without the rest", e)
+      case Some(Success(_)) => ()
     }
-    val deadline = System.nanoTime() + window.toNanos
-    def failure: Option[Throwable] =
-      action.value.flatMap(_.failed.toOption)
-    def proceed(): Boolean = {
-      val n = reported.get()
-      n == numParts || (System.nanoTime() >= deadline && n >= quorum) ||
-        failure.isDefined
-    }
-    while (!proceed()) { drain(); Thread.sleep(5) }
-    // Job failure: tolerated exactly like a straggler IF the quorum is
-    // already met (no point waiting out the window — no more results are
-    // coming); fatal otherwise. Tolerated failures are LOUD: a
-    // deterministically-failing partition (a data bug, not a straggler)
-    // would otherwise silently drop the same slice of data every iteration.
-    failure.foreach { e =>
-      if (reported.get() < quorum) throw e
-      log.warn(
-        s"iteration ${ctx.currentIteration}: worker job failed after " +
-          s"${reported.get()}/$numParts partitions reported (>= quorum $quorum); " +
-          s"proceeding without the rest", e)
-    }
-    if (reported.get() < numParts) {
-      // Stragglers are cancelled, not awaited — their partitions contribute
-      // nothing this iteration (reference: unreported workers are skipped
-      // once the ratio is met, NettyMasterCoordinator.java:566-704).
-      try action.cancel()
-      catch { case _: Throwable => () }
-    }
-    drain()
-    combine match {
-      case Some(_) =>
-        master.compute(
-          Iterator.single(acc.getOrElse(throw new IllegalStateException(
-            "no worker results this iteration (all partitions timed out?)"))),
-          lastMaster, ctx)
-      case None =>
-        // Deterministic fold order: partition index, like the full barrier.
-        val arrived = (0 until numParts).iterator.flatMap(i => Option(results.get(i)))
-        master.compute(arrived, lastMaster, ctx)
-    }
+    Iterator.tabulate(numParts)(slots.get).flatMap(r => Option(r).flatten)
   }
 }
 

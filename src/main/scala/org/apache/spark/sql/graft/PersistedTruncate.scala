@@ -32,6 +32,10 @@ import org.apache.spark.storage.StorageLevel
   * The `.map(_.copy())` is load-bearing: operators reuse UnsafeRow buffers,
   * so persisting the raw iterator would alias every row in a partition to
   * the last buffer state.
+  *
+  * Only for loops that converge in a few rounds, like CC: the RDD lineage
+  * still grows every round (persist does not cut it), so long loops need
+  * `localCheckpoint`.
   */
 object PersistedTruncate {
 

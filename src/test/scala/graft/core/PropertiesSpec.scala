@@ -10,9 +10,9 @@ import graft.operators.NeuralNet.NNGrad
 /** The properties the reference's `Combinable` contract assumes but never
   * tests (SURVEY §5): every combiner handed to the kernel must be
   * associative and commutative up to floating-point reassociation (exact on
-  * longs; tolerant on doubles). The full barrier folds in partition order,
-  * so it only needs associativity; the quorum barrier folds in arrival
-  * order, which also needs commutativity.
+  * longs; tolerant on doubles). The kernel folds in partition order in both
+  * barrier modes, so it only needs associativity; commutativity is checked
+  * because the reference's master merges in arrival order.
   */
 object CombinerProperties extends Properties("combiners") {
 

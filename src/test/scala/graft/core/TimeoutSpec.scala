@@ -2,7 +2,7 @@ package graft.core
 
 import scala.concurrent.duration._
 
-import org.apache.spark.SparkException
+import org.apache.spark.{SparkException, TaskContext}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -139,6 +139,29 @@ class TimeoutSpec extends AnyFunSuite {
       minWorkersRatio = 0.75, minWorkersTimeout = 30.seconds)
     val (nParts, _) = r.master
     assert(nParts >= 12L && nParts <= 15L, s"proceeded with $nParts partitions")
+  }
+
+  test("quorum barrier folds the results in partition order, not arrival order") {
+    // 16 partitions (> SmallWorkerCount) finishing in reverse partition
+    // order, well inside the window, so every partition reports; the
+    // combiner concatenates, so the master sees the fold order itself.
+    val reverseWorker = new WorkerComputable[Long, Seq[Int], Seq[Int]] {
+      def compute(rs: Iterator[Long], last: Option[Seq[Int]],
+          ctx: IterationContext): Seq[Int] = {
+        val i = TaskContext.getPartitionId()
+        Thread.sleep((15 - i) * 40L)
+        Seq(i)
+      }
+    }
+    val seqMaster = new MasterComputable[Seq[Int], Seq[Int]] {
+      def compute(ws: Iterator[Seq[Int]], last: Option[Seq[Int]],
+          ctx: IterationContext): Seq[Int] = ws.flatten.toSeq
+    }
+    val ds = spark.range(0L, 16L, 1L, 16).as[Long]
+    val r = Iterate.run[Long, Seq[Int], Seq[Int]](
+      ds, reverseWorker, seqMaster, maxIterations = 1, combine = Some(_ ++ _),
+      minWorkersRatio = 0.75, minWorkersTimeout = 30.seconds)
+    assert(r.master == (0 until 16))
   }
 
   test("quorum ratio is forced to 1.0 for small worker counts (<= 10 partitions)") {
