@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration.{Duration, FiniteDuration}
-import scala.reflect.ClassTag
 import scala.util.{Failure, Success}
 
 import org.apache.spark.rdd.RDD
@@ -133,7 +132,7 @@ object Iterate {
     *   default 60 s in the reference) — before it elapses the master waits
     *   for everyone regardless of the ratio.
     */
-  def run[T, M, W: ClassTag](
+  def run[T, M, W](
       data: Dataset[T],
       worker: WorkerComputable[T, M, W],
       master: MasterComputable[M, W],
