@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Per-round benchmark harness: times every registered query on
@@ -110,31 +108,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS); fixed at session build so read
-      // behavior never depends on query execution order (see Tables.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE: ON — Spark 4's default, kept deliberately (SURVEY §4 "AQE
-      // decision"); SPARK_GRAFT_AQE=false re-runs the whole bench without
-      // adaptive execution for an A/B.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Join strategy: Spark's sort-merge default, DELIBERATELY kept after
-      // a measured A/B (round 15): preferSortMergeJoin=false +
-      // maxShuffledHashJoinLocalMapThreshold=64m — the optimization guide's
-      // §9 baseline — ran the 16 join-heaviest queries 15-20% SLOWER here
-      // (subset 25.7s → 30.5s, builds 27.0s → 32.2s at sf0.1/local[32]):
-      // per-partition hash-map builds cost more than the avoided sorts on
-      // AQE-coalesced partitions of this size. Override via
-      // SPARK_GRAFT_PREFER_SMJ=false to re-run that A/B.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local()
     // Shared-stage materialization (graft.Materialize): on by default, so
     // the bench measures the PIPELINE execution model — each expensive
     // upstream chain (p1 dispositions, d16 pairs, d9 verdicts, the kept
@@ -155,20 +130,11 @@ object Bench {
       Registry.byName(name).run(spark, dir)
         .write.mode("overwrite").format("noop").save()
 
-    // Drop EVERYTHING a query cached: keeps measurements order-independent
-    // (no query — and no later REP of the same query — benefits from a
-    // predecessor's cache). clearCache() evicts SQL CacheManager entries
-    // with their blocks; the RDD sweep catches raw-RDD persists (d7).
-    // The RDD sweep ALONE is not enough: it drops blocks but leaves the
-    // CacheManager's plan→InMemoryRelation mapping, and the next identical
-    // plan fragment silently reads the stale cache — through round 4 that
-    // leak handed every rep>1 of a persisting query (d2/d4/d6/d9/q6/t8/t9)
-    // its predecessor's cache, recording d6 at 0.44 s vs its honest ~2 s
-    // (the structurally impossible d6 < d3 baseline row the round-3/4
-    // verdicts flagged).
+    // Drop EVERYTHING a query cached (GraftSession.sweep): keeps
+    // measurements order-independent (no query — and no later REP of the
+    // same query — benefits from a predecessor's cache).
     def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.sweep(spark)
       // Level the heap in the UNTIMED gap: without this, an allocation-heavy
       // query hands its GC debt to whichever query runs next in suite order
       // (d1→d2 was the documented slot effect — d2 measured 1.3-2.2× its
@@ -411,10 +377,10 @@ object Bench {
     // then always contains the numbers a reader needs. Still exactly ONE
     // JSON line with the same fields; JSON key order carries no meaning.
     // CPU-contract observability (round 16, VERDICT r15 #2): the bench DOES
-    // honor $SPARK_GRAFT_CPUS (master local[$cpus] + shuffle.partitions
-    // above), but nothing in the output let the driver VERIFY that — at
-    // sf0.1 fixed per-exec overhead dominates, so an 8-core run can beat a
-    // 32-core run and look like the knob is ignored. Emit the requested
+    // honor $SPARK_GRAFT_CPUS (GraftSession.local: master local[$cpus] +
+    // shuffle.partitions), but nothing in the output let the driver VERIFY
+    // that — at sf0.1 fixed per-exec overhead dominates, so an 8-core run
+    // can beat a 32-core run and look like the knob is ignored. Emit the requested
     // core count AND the context's actual defaultParallelism so "applied"
     // is checkable from the line itself.
     val defaultPar = spark.sparkContext.defaultParallelism

@@ -21,8 +21,8 @@ import org.apache.spark.sql.Dataset
   * tools/record_baseline.py caught it on the first re-record.
   *
   * Usage: queries call [[persisted]] instead of bare `.persist()`. Outside
-  * any scope it is exactly `.persist()` (Bench/Verify own their session and
-  * sweep with `spark.catalog.clearCache()`); inside [[scoped]] (the
+  * any scope it is exactly `.persist()` (the engine's mains own their
+  * session and sweep it with [[GraftSession.sweep]]); inside [[scoped]] (the
   * `GraftQuery.runManaged` path) every tracked frame is properly
   * unpersisted when the scope closes, so a library caller's long-lived
   * session keeps ITS caches while query-internal ones are fully evicted —

@@ -2,11 +2,54 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SQL entry point: registers every test-data table as a temp view (plus
-  * the engine's custom functions) so users can drive the engine with plain
-  * `spark.sql(...)` — the query surface is not Column-API-only.
+/** The engine's session: the one place its mains build a SparkSession
+  * ([[local]]) and drop its caches ([[sweep]]), and the SQL entry point that
+  * registers every test-data table as a temp view (plus the engine's custom
+  * functions) so users can drive the engine with plain `spark.sql(...)` —
+  * the query surface is not Column-API-only.
   */
 object GraftSession {
+
+  /** `$SPARK_GRAFT_CPUS`: the local core count and shuffle partition count
+    * of [[local]] (default 4).
+    */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session Bench, Verify, Cli, PlanDump and the probes run on:
+    * `local[$SPARK_GRAFT_CPUS]` with as many shuffle partitions, UTC session
+    * time, no UI, log level WARN. It sets only what Spark does not already
+    * default to. Two defaults are kept on purpose: adaptive execution (SURVEY
+    * §4 "AQE decision") and sort-merge joins (a round-15 A/B ran the 16
+    * join-heaviest queries 15-20% slower with shuffled hash joins at sf0.1).
+    * Any other setting is a `spark.*` JVM system property, which SparkConf
+    * loads: `-Dspark.sql.adaptive.enabled=false` runs a main without AQE.
+    */
+  def local(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // events.parquet is TIMESTAMP(NANOS); fixed at session build so read
+      // behavior never depends on query execution order (see Tables.events).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Drop every cache in `spark`: the SQL cache entries, then every
+    * persistent RDD (raw-RDD persists such as ConnectedComponents' rounds).
+    * The RDD sweep alone is not enough: it drops the blocks but leaves the
+    * CacheManager's plan → InMemoryRelation mapping, and the next identical
+    * plan fragment silently reads the stale cache. Until round 5 that handed
+    * every bench rep after the first of a persisting query its predecessor's
+    * cache (d6 recorded at 0.44 s against its honest ~2 s).
+    */
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
 
   /** Register all tables of `sfDir` as temp views named after the tables,
     * and the engine's SQL functions (cosine_similarity, dot_product).

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS); fixed at session build so read
-      // behavior never depends on query execution order (see Tables.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE: ON — Spark 4's default, kept deliberately (SURVEY §4 "AQE
-      // decision"): every oracle gate and bench number is certified under
-      // adaptive execution (runtime coalescing + skew-join splitting), which
-      // composes with the engine's explicit salting/broadcast choices. The
-      // knob exists so the whole gate can be re-run with AQE OFF in one
-      // invocation (SPARK_GRAFT_AQE=false) — proving no query DEPENDS on
-      // adaptive rewrites for correctness.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Shared-stage materialization (graft.Materialize): the run-scoped
     // write-once parquet layer between composed pipeline stages. Verify
     // runs WITH it on by default — so the oracle gate certifies the shared
@@ -103,31 +84,19 @@ object Verify {
       }
       // Queries may persist intermediates (LSH band frames); drop them so
       // no query's cache lingers into (or influences) the next one.
-      // clearCache() evicts SQL-cache ENTRIES too — the RDD sweep alone
-      // leaves CacheManager mappings that silently rewrite later identical
-      // plan fragments onto stale caches (see Bench.exec).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = jsonObject(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
     spark.stop()
   }
+
+  /** `entries` as one JSON object, keys and values escaped by
+    * [[Bench.jsonString]]: a tab or CR in builder-authored SQL must not make
+    * the driver's json.load fail and silently zero the round's correctness.
+    */
+  private[graft] def jsonObject(entries: Iterable[(String, String)]): String =
+    entries.map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+      .mkString("{", ",", "}")
 }

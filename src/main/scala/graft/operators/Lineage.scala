@@ -39,7 +39,7 @@ import org.apache.spark.storage.StorageLevel
   * final action executes everything once).
   *
   * The final boundary RDD (if any) stays persisted — the returned frame
-  * reads it; callers sweep via Bench/Verify's clearCache+RDD sweep or
+  * reads it; callers sweep via [[graft.GraftSession.sweep]] or
   * `GraftQuery.runManaged`'s RDD snapshot diff, both of which already
   * handle raw RDD persists.
   */

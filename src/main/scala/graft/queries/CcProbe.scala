@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement probe for the ConnectedComponents delta-propagation A/B
   * (round-13 verdict #4: the d16_clusters sf1 build cost). Runs the d16
   * chain under an enabled Materialize at Bench's config (local[N],
@@ -20,16 +18,7 @@ import org.apache.spark.sql.SparkSession
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft.operators.ConnectedComponents", org.apache.logging.log4j.Level.INFO)
     graft.Materialize.enable()

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 measurement probe: per-stage wall of the d16_verified_pairs
@@ -12,20 +11,11 @@ import org.apache.spark.sql.functions._
 object D16StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     def time(name: String, reps: Int = 3)(df: => org.apache.spark.sql.DataFrame): Unit = {
       var best = Double.MaxValue
       for (_ <- 1 to reps) {
-        spark.catalog.clearCache()
+        graft.GraftSession.sweep(spark)
         val t0 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
@@ -41,7 +31,7 @@ object D16StageProbe {
     // warm pass (codegen)
     D16SemanticLshClusters.verifiedPairsOver(spark, emb, tables, masks, 1,
       D16SemanticLshClusters.threshold).write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
+    graft.GraftSession.sweep(spark)
     // Replicate candidatePairsOver's internals stage by stage.
     org.apache.spark.sql.graft.DotProduct.register(spark)
     val e = emb.select(

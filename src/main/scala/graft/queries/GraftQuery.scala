@@ -35,8 +35,8 @@ trait GraftQuery {
     *   - raw RDD persists (d7's per-round lineage truncation) are swept by
     *     snapshot-diff on RDD ids.
     *
-    * Bench/Verify instead sweep with `spark.catalog.clearCache()` — they
-    * own their whole session. Library callers get this.
+    * The engine's mains own their whole session and sweep it with
+    * [[graft.GraftSession.sweep]] instead. Library callers get this.
     */
   def runManaged[T](spark: SparkSession, sfDir: String)(sink: DataFrame => T): T = {
     val before = spark.sparkContext.getPersistentRDDs.keySet

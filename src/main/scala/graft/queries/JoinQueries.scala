@@ -84,8 +84,8 @@ object J2TopK extends GraftQuery {
 
 /** j5: broadcast ANTI join — "customers with no order above the threshold",
   * the exclusion probe every incremental pipeline runs (d8's exact-verify
-  * step and PipelineExample's admission both use left_anti internally; this
-  * puts the operator itself on the oracle surface). The probe side filters
+  * step uses left_anti internally; this puts the operator itself on the
+  * oracle surface). The probe side filters
   * BEFORE the join, so the anti-join's build input is the small qualifying
   * subset, and the join needs only the key column of it.
   */

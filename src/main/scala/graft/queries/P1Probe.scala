@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-15 measurement probe (CcProbe's sibling): wall + convergence trace
   * of the p1_dispositions build — the doc-family ConnectedComponents caller
   * (small near-dup cliques) whose per-round fixed cost the delta
@@ -11,31 +9,20 @@ import org.apache.spark.sql.SparkSession
 object P1Probe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft.operators.ConnectedComponents", org.apache.logging.log4j.Level.INFO)
     // warm codegen on the small SF, then time the sf-dir build fresh
     P1CleanCorpus.runOn(spark, graft.Tables.documents(spark, dir.replaceAll("sf[0-9.]+$", "sf0.001")))
       .write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    graft.GraftSession.sweep(spark)
     var best = Double.MaxValue
     for (_ <- 1 to 3) {
       val t0 = System.nanoTime()
       P1CleanCorpus.runOn(spark, graft.Tables.documents(spark, dir))
         .write.mode("overwrite").format("noop").save()
       best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.GraftSession.sweep(spark)
       System.gc()
     }
     println(f"[p1probe] dispositions build (min of 3): $best%.3f s")

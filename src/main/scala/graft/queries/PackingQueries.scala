@@ -52,7 +52,7 @@ object P2SequencePack extends GraftQuery {
       partitions)
 
   /** Library form: pack any (doc_id, n_tokens) frame — e.g. a cleaned
-    * survivor set (PipelineExample stage 6) — into seqLen-token chunks.
+    * survivor set — into seqLen-token chunks.
     */
   def pack(spark: SparkSession, docTokens: DataFrame, partitions: Int): DataFrame = {
     require(partitions >= 1, s"partitions must be >= 1, got $partitions")

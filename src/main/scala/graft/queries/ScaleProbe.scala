@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement main for the composed-chain scale experiment
   * (tools/scale_slope.py): times d16's candidate+verify chain over an
   * arbitrary data dir at an arbitrary (planes, tables, radius) config and
@@ -18,15 +16,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, planesS, tablesS, radiusS) = args
     val (planes, nTables, radius) = (planesS.toInt, tablesS.toInt, radiusS.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import D16SemanticLshClusters._
     val t0 = System.nanoTime()
     val cand = candidatePairsWith(spark, dir,

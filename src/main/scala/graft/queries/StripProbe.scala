@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,21 +14,12 @@ import graft.operators.TextOps
 object StripProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     def timed(label: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = body
       println(f"""{"stage":"$label","rows":$n,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.GraftSession.sweep(spark)
     }
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     timed("tokens")(docs.select(TextOps.tokens(col("text")).as("t"))

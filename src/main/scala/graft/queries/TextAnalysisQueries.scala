@@ -75,9 +75,9 @@ object T1LangId extends GraftQuery {
 
 /** t14: language confusion matrix — declared `lang` metadata vs t1's
   * detected language, counted per (declared, predicted) cell: the audit
-  * table behind any language-consistency gate (PipelineExample stage 1
-  * drops docs off this matrix's diagonal; this query is how an operator
-  * decides whether that gate is sane before enabling it). One partial-
+  * table behind any language-consistency gate (one that drops docs off
+  * this matrix's diagonal; this query is how an operator decides whether
+  * that gate is sane before enabling it). One partial-
   * aggregated groupBy over a scan-bound projection.
   */
 object T14LangConfusion extends GraftQuery {

@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface (joins, aggregation ladders, windows, banded LSH self-join, the
   * gram-hits chain, distributed rank) in a sibling session with AQE OFF and
   * asserts row-identical results. The full-surface certification is the
-  * same knob at driver scale: `SPARK_GRAFT_AQE=false` on Verify re-runs the
-  * whole oracle gate without AQE (re-certified round 13: 153/153).
+  * same setting at driver scale: Verify run with the JVM option
+  * `-Dspark.sql.adaptive.enabled=false` re-runs the whole oracle gate
+  * without AQE (re-certified round 13: 153/153).
   */
 class AqeParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

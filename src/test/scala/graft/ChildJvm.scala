@@ -28,18 +28,21 @@ object ChildJvm {
 
   /** Runs `mainClass` with `args`, returning its exit code and its combined
     * stdout/stderr; a child still running after `timeoutSeconds` is killed
-    * and reported with exit code -1.
+    * and reported with exit code -1. `jvmOptions` go before the main class
+    * (e.g. `-Dspark.x=y`); `env` is added to this JVM's environment.
     */
-  def run(mainClass: String, args: Seq[String], timeoutSeconds: Long = 300): Outcome = {
+  def run(mainClass: String, args: Seq[String], timeoutSeconds: Long = 300,
+      jvmOptions: Seq[String] = Nil, env: Map[String, String] = Map.empty): Outcome = {
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val cmd = Seq(javaBin, "-Xmx1g") ++ addOpens ++
+    val cmd = Seq(javaBin, "-Xmx1g") ++ addOpens ++ jvmOptions ++
       Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args
     val log = Files.createTempFile("graft-child-jvm", ".log")
     try {
-      val proc = new ProcessBuilder(cmd.asJava)
+      val builder = new ProcessBuilder(cmd.asJava)
         .redirectErrorStream(true)
         .redirectOutput(log.toFile)
-        .start()
+      builder.environment().putAll(env.asJava)
+      val proc = builder.start()
       val exit =
         if (proc.waitFor(timeoutSeconds, TimeUnit.SECONDS)) proc.exitValue()
         else { proc.destroyForcibly().waitFor(); -1 }

@@ -2,8 +2,38 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Builds [[GraftSession.local]] and prints one `SESSION` line: master,
+  * shuffle partitions, session time zone, `nanosAsLong` and whether AQE is
+  * on. Runs in a child JVM ([[ChildJvm]]): the test JVM already has its
+  * session.
+  */
+object GraftSessionLocalMain {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local()
+    val conf = spark.conf
+    println(Seq(spark.sparkContext.master, conf.get("spark.sql.shuffle.partitions"),
+      conf.get("spark.sql.session.timeZone"), conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+      conf.get("spark.sql.adaptive.enabled")).mkString("SESSION ", " ", ""))
+    spark.stop()
+  }
+}
+
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  test("local() builds local[$SPARK_GRAFT_CPUS] and takes other settings from -D options") {
+    def session(jvmOptions: Seq[String]): String = {
+      val out = ChildJvm.run("graft.GraftSessionLocalMain", Nil,
+        jvmOptions = jvmOptions, env = Map("SPARK_GRAFT_CPUS" -> "3"))
+      val line = out.output.linesIterator.find(_.startsWith("SESSION "))
+      assert(out.exitCode == 0 && line.isDefined,
+        s"child JVM failed:\n${out.output.takeRight(4000)}")
+      line.get
+    }
+    assert(session(Seq("-Dspark.sql.adaptive.enabled=false")) ==
+      "SESSION local[3] 3 UTC true false")
+    assert(session(Nil) == "SESSION local[3] 3 UTC true true")
+  }
 
   test("plain SQL runs against registered views and custom functions") {
     GraftSession.open(spark, TestSpark.sf0001)

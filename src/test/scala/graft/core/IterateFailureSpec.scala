@@ -74,6 +74,18 @@ class IterateFailureSpec extends AnyFunSuite {
     assert(left.isEmpty, s"persistent RDDs left behind: $left")
   }
 
+  test("an empty input fails before the first iteration and releases the persisted input") {
+    val empty = Seq.empty[Long].toDS()
+    val left = persistedLeftBy {
+      val e = intercept[IllegalArgumentException] {
+        Iterate.run[Long, Long, Long](
+          empty, new FailingWorker, TimeoutSumMaster, maxIterations = 3, combine = Some(_ + _))
+      }
+      assert(e.getMessage.contains("input Dataset has no partitions"))
+    }
+    assert(left.isEmpty, s"persistent RDDs left behind: $left")
+  }
+
   test("an unreadable checkpoint releases the persisted input") {
     val dir = Files.createTempDirectory("graft-bad-checkpoint")
     val state = Files.write(dir.resolve("master_state.bin"), Array[Byte](1, 2, 3))
