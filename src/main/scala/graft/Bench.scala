@@ -144,12 +144,7 @@ object Bench {
       System.gc()
     }
 
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        Registry.all.filter(q => want(q.name))
-      case None => Registry.all
-    }
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
 
     // Warmup (untimed, smallest SF): fills codegen/JIT caches for every
     // query's plan shapes so the timed pass measures data cost (see

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries.Registry
+
 /** Command-line client — the engine's analogue of the reference's client
   * surface (guagua-mapreduce/.../GuaguaMapReduceClient.java:425-487,
   * GuaguaOptionsParser.java:378-398). The reference CLI assembles a job
@@ -183,10 +185,12 @@ object Cli {
         // stops the rest) — but failures are COLLECTED, their stale/partial
         // outputs removed, and the invocation fails at the end: a suite out
         // dir that survives to exit 0 is complete, never "looks complete".
+        // Each query runs managed, so the caches it created are released
+        // before the next one starts and none outlive the invocation.
         val failed = scala.collection.mutable.ListBuffer.empty[String]
         names.foreach { q =>
-          try SparkEntry.queries(q)(spark, input)
-            .write.mode("overwrite").parquet(s"$out/$q.parquet")
+          try Registry.byName(q).runManaged(spark, input)(
+            _.write.mode("overwrite").parquet(s"$out/$q.parquet"))
           catch {
             case scala.util.control.NonFatal(e) =>
               System.err.println(s"[cli] $q failed: ${e.getMessage}")

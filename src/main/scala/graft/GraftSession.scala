@@ -17,7 +17,9 @@ object GraftSession {
 
   /** The session Bench, Verify, Cli, PlanDump and the probes run on:
     * `local[$SPARK_GRAFT_CPUS]` with as many shuffle partitions, UTC session
-    * time, no UI, log level WARN. It sets only what Spark does not already
+    * time, no UI, log level WARN except the engine's own `graft` loggers,
+    * which stay at INFO (so a run's log shows, for one, which
+    * ConnectedComponents path ran). It sets only what Spark does not already
     * default to. Two defaults are kept on purpose: adaptive execution (SURVEY
     * §4 "AQE decision") and sort-merge joins (a round-15 A/B ran the 16
     * join-heaviest queries 15-20% slower with shuffled hash joins at sf0.1).
@@ -35,6 +37,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft", org.apache.logging.log4j.Level.INFO)
     spark
   }
 

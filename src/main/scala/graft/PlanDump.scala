@@ -27,12 +27,7 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     val spark = GraftSession.local()
     Files.createDirectories(outDir)
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        Registry.all.filter(q => want(q.name))
-      case None => Registry.all
-    }
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     selected.foreach { q =>
       try {
         val df = q.run(spark, sfDir)

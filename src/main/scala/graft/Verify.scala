@@ -1,6 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+
+import graft.queries.Registry
+
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -19,12 +22,7 @@ object Verify {
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "600").toLong
     // Same restriction knob Bench has, for local iteration on one query;
     // the driver leaves it unset and always dumps the full suite.
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        SparkEntry.queries.filter { case (n, _) => want(n) }
-      case None => SparkEntry.queries
-    }
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     // A crashed query must still leave a result dir: the driver's comparer
     // enumerates the dirs that exist, so a query that writes nothing silently
     // drops out of CORRECTNESS_r{N}.json (round 7 lost 11 entries this way
@@ -42,11 +40,12 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name: error-marker write failed: ${e.getMessage}")
       }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { q =>
+      val name = q.name
       val task = new java.util.concurrent.FutureTask[Unit](() =>
         try {
           spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         } finally spark.sparkContext.clearJobGroup())
       val th = new Thread(task, s"verify-$name")
@@ -86,7 +85,7 @@ object Verify {
       // no query's cache lingers into (or influences) the next one.
       GraftSession.sweep(spark)
     }
-    val json = jsonObject(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) })
+    val json = jsonObject(selected.flatMap(q => q.oracle.map(q.name -> _)))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
     spark.stop()

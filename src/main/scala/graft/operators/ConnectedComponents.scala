@@ -68,15 +68,15 @@ import org.apache.spark.storage.StorageLevel
   * Scale: the working set is the PAIR list — orders of magnitude smaller
   * than the corpus — partitioned by `edgePartitions` (size with the
   * caller's pair-count rule, e.g. d7's `edgePartitionsFor`). Per-round
-  * lineage truncation goes through an RDD boundary (persist + rebuild
-  * DataFrame): the Catalyst plan stays constant-size instead of embedding
-  * every prior round (measured 10.5 s → ~4 s cold at sf0.1 on d7), RDD
-  * lineage keeps partitions recomputable on executor loss (which
-  * localCheckpoint would sacrifice), and each round unpersists its
-  * predecessor precisely. The edge list itself is a DataFrame-level
-  * persist (not an RDD truncate): it is built once — no lineage growth —
-  * and keeping it as an InMemoryRelation preserves its HashPartitioning
-  * for the per-round join, which the RDD boundary would erase.
+  * lineage truncation goes through the engine's round boundary
+  * (`PersistedTruncate.truncate` without a local checkpoint): the Catalyst
+  * plan stays constant-size instead of embedding every prior round
+  * (measured 10.5 s → ~4 s cold at sf0.1 on d7), RDD lineage keeps
+  * partitions recomputable on executor loss (which a local checkpoint
+  * would sacrifice), and each round unpersists its predecessor precisely.
+  * The edge list itself is a DataFrame-level persist (not a round
+  * boundary): it is built once — no lineage growth — and as an
+  * InMemoryRelation it keeps its HashPartitioning for the per-round join.
   *
   * SIZE-DECIDED DRIVER PATH: the pair list is persisted and counted first
   * (one job; the distributed seed would materialize the same cache). When
@@ -185,10 +185,10 @@ object ConnectedComponents {
     // node-partitioned (the groupBy(src) reuses the edge repartition), the
     // merge left-join preserves the streamed side's partitioning, so from
     // round 1 on the only exchanges left are delta-sized (prop/chase/cand).
-    def truncate(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[_]) =
-      org.apache.spark.sql.graft.PersistedTruncate.truncate(
-        df, StorageLevel.MEMORY_AND_DISK)
+    // Persist only, no local checkpoint: the loop converges in a few rounds,
+    // and the kept lineage recomputes a lost partition.
+    def truncate(df: DataFrame) =
+      org.apache.spark.sql.graft.PersistedTruncate.truncate(df, localCheckpoint = false)
     val edges = pairs.union(pairs.select(col("pb"), col("pa")))
       .toDF("src", "dst")
       .repartition(edgePartitions, col("src"))

@@ -72,6 +72,12 @@ object KMeans {
       .agg(count(lit(1)).as("cnt"), dims.map(i => sum(col(s"f$i")).as(s"sum_f$i")): _*)
   }
 
+  /** A Lloyd run's result: the final centers and the last iteration's
+    * per-cluster row counts (0 for an empty cluster; no counts when no
+    * iteration ran).
+    */
+  final case class Fit(centers: Seq[Seq[Double]], counts: Seq[Long])
+
   /** Full Lloyd loop with per-iteration center rounding (determinism knob).
     * Empty clusters keep their previous center (cannot happen on the pinned
     * query surface; guarded for library use).
@@ -82,26 +88,27 @@ object KMeans {
       init: Seq[Seq[Double]],
       iterations: Int,
       d: Distance,
-      roundDecimals: Int = 6): Seq[Seq[Double]] = {
+      roundDecimals: Int = 6): Fit = {
     val dims = features.indices
-    var centers = init
+    var fit = Fit(init, Nil)
     var it = 0
     // CLI `-c` cap (graft.core.IterationBudget): min(declared, cap).
     val effIterations = graft.core.IterationBudget.effective(iterations)
     while (it < effIterations) {
-      val rows = step(df, features, centers, d).collect()
+      val rows = step(df, features, fit.centers, d).collect()
       val byCluster = rows.map(r => r.getInt(0) -> r).toMap
-      centers = centers.zipWithIndex.map { case (old, ci) =>
+      val next = fit.centers.zipWithIndex.map { case (old, ci) =>
         byCluster.get(ci) match {
           case Some(r) =>
-            val cnt = r.getLong(1).toDouble
-            dims.map(i => round10(r.getDouble(2 + i) / cnt, roundDecimals))
-          case None => old
+            val cnt = r.getLong(1)
+            (dims.map(i => round10(r.getDouble(2 + i) / cnt, roundDecimals)), cnt)
+          case None => (old, 0L)
         }
       }
+      fit = Fit(next.map(_._1), next.map(_._2))
       it += 1
     }
-    centers
+    fit
   }
 
   private def round10(x: Double, decimals: Int): Double =

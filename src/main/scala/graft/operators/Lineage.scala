@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.PersistedTruncate
 
 /** Lineage-bounded iteration driver for DataFrame loops — the hygiene that
   * makes LONG driver loops viable. The reference's default iteration budget
@@ -13,71 +13,51 @@ import org.apache.spark.storage.StorageLevel
   * iterative-dataflow failure mode that never shows up in a 5-round demo
   * and always shows up in production.
   *
-  * `loop` runs `step` for `rounds` iterations and, every `cadence` rounds,
-  * truncates lineage through an RDD boundary: local-checkpoint the round's
-  * RDD (persist MEMORY_AND_DISK + clear its dependency chain once
-  * materialized), rebuild a DataFrame whose plan is a constant-size scan of
-  * that RDD, and unpersist the PREVIOUS boundary (no longer reachable).
+  * `loop` runs `step` for `rounds` iterations. A loop of at most
+  * [[LazyRounds]] rounds is a plain fold: the caller's final action
+  * executes the whole lazy plan once (g1/g3's declared 5 rounds, which
+  * match their unrolled oracle SQL). A longer loop crosses the engine's one
+  * round boundary, [[PersistedTruncate.truncate]] with a local checkpoint,
+  * after every [[LazyRounds]]-th round that another round follows:
+  * the round's rows are persisted, local-checkpointed and counted, the
+  * carried frame becomes a scan of them that keeps the step's output
+  * partitioning, and the PREVIOUS boundary (no longer reachable) is
+  * unpersisted. So no plan is more than [[LazyRounds]] steps deep.
   *
-  * The checkpoint must be a REAL one — persist alone is not truncation.
-  * A merely-persisted boundary short-circuits recomputation but keeps the
-  * parent RDD object graph alive, and every task ships that graph: at the
-  * reference's 50-round budget the serialized chain is deep enough that
-  * task DESERIALIZATION stack-overflows (observed as a mid-suite
-  * `StackOverflowError` in a 9000-stage session — flaky, because overflow
-  * depends on thread stack state). `localCheckpoint` clears the
-  * dependencies after materialization, so the shipped graph is O(cadence)
-  * forever. The cost is the checkpoint contract: on executor loss the
-  * checkpointed partitions are unrecoverable and the JOB fails (retry
-  * restarts the loop from its last driver-side state — the A11 pattern);
-  * a cluster deployment that wants lineage-free recovery instead swaps in
-  * reliable `rdd.checkpoint` against an HDFS dir — one line. Cadence
-  * trades per-boundary materialization cost against plan depth: cadence 1
-  * = constant plan, one extra job per round; cadence 5 = plans ≤ 5 steps
-  * deep, one extra job per 5 rounds; cadence 0 = never (the
-  * lazy-composition shape the short declared loops use, where the caller's
-  * final action executes everything once).
+  * The checkpoint must be a REAL one — persist alone is not truncation: a
+  * merely-persisted boundary keeps the parent RDD object graph alive, every
+  * task ships it, and at the reference's 50-round budget task
+  * deserialization stack-overflows (see [[PersistedTruncate]] for the
+  * measurement and for the cost of the checkpoint contract).
   *
   * The final boundary RDD (if any) stays persisted — the returned frame
   * reads it; callers sweep via [[graft.GraftSession.sweep]] or
-  * `GraftQuery.runManaged`'s RDD snapshot diff, both of which already
-  * handle raw RDD persists.
+  * `GraftQuery.runManaged`'s RDD snapshot diff. Tests that need per-round
+  * plan sizes or times record them from inside their own `step`.
   */
 object Lineage {
 
-  /** Per-round observation: wall seconds for the round (step construction +
-    * boundary materialization when this round hit the cadence) and the
-    * analyzed-plan node count of the frame carried into the next round —
-    * the quantity that must stay FLAT for the loop to survive 50+ rounds.
+  /** The deepest lazy plan a loop builds: the 5 rounds the oracle-gated
+    * g1/g3 already run as one plan.
     */
-  final case class Round(i: Int, seconds: Double, planNodes: Int)
+  val LazyRounds = 5
 
-  def loop(
-      spark: SparkSession,
-      init: DataFrame,
-      rounds: Int,
-      cadence: Int = 1,
-      observer: Round => Unit = _ => ())(step: DataFrame => DataFrame): DataFrame = {
+  def loop(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    require(cadence >= 0, s"cadence must be >= 0 (0 = never truncate), got $cadence")
-    var cur = init
-    var prevBoundary: RDD[Row] = null
     // CLI `-c` cap (graft.core.IterationBudget): min(declared, cap);
     // identity unless graft.Cli set a cap for this invocation.
-    for (i <- 1 to graft.core.IterationBudget.effective(rounds)) {
-      val t0 = System.nanoTime()
-      var next = step(cur)
-      if (cadence > 0 && i % cadence == 0) {
-        val rdd = next.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.localCheckpoint() // sever the dependency graph, not just recompute
+    val n = graft.core.IterationBudget.effective(rounds)
+    var cur = init
+    var boundary: RDD[_] = null
+    for (i <- 1 to n) {
+      cur = step(cur)
+      if (i % LazyRounds == 0 && i < n) {
+        val (next, rdd) = PersistedTruncate.truncate(cur, localCheckpoint = true)
         rdd.count() // materialize: deps drop here; old boundary never read again
-        next = spark.createDataFrame(rdd, next.schema)
-        if (prevBoundary != null) prevBoundary.unpersist(blocking = false)
-        prevBoundary = rdd
+        if (boundary != null) boundary.unpersist(blocking = false)
+        boundary = rdd
+        cur = next
       }
-      val nodes = next.queryExecution.analyzed.collect { case p => p }.length
-      observer(Round(i, (System.nanoTime() - t0) / 1e9, nodes))
-      cur = next
     }
     cur
   }

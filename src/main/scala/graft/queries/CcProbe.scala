@@ -12,15 +12,13 @@ package graft.queries
   * (SCALE_SLOPE_r13 and earlier, and this probe's first run) were
   * inclusive — the r13 verdict's "85.6 s propagation" read such a nested
   * number as exclusive; subtract the pairs row when comparing against
-  * them. The CC logger is raised to INFO so the per-round delta sizes
-  * (the convergence trace) land in the output.
+  * them. The session keeps the CC logger at INFO, so the per-round delta
+  * sizes (the convergence trace) land in the output.
   */
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val spark = graft.GraftSession.local()
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.operators.ConnectedComponents", org.apache.logging.log4j.Level.INFO)
     graft.Materialize.enable()
     val t0 = System.nanoTime()
     val n = D16SemanticLshClusters.run(spark, dir).count()

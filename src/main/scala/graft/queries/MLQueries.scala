@@ -257,31 +257,13 @@ object Q9KMeansLoop extends GraftQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import LineitemFeatures._
-    val li = Tables.lineitem(spark, sfDir)
-    var centers = init
-    var last: Array[(Int, Long, Seq[Double])] = Array.empty
-    var it = 0
-    // CLI `-c` cap (graft.core.IterationBudget): min(declared, cap).
-    val effIterations = graft.core.IterationBudget.effective(iterations)
-    while (it < effIterations) {
-      val rows = KMeans.step(li, kmeansCols, centers, KMeans.SquaredEuclidean).collect()
-      val byCluster = rows.map(r => r.getInt(0) -> r).toMap
-      last = (0 until k).map { ci =>
-        byCluster.get(ci) match {
-          case Some(r) =>
-            val cnt = r.getLong(1)
-            val cs = (0 until dims).map(i =>
-              graft.functions.Rounding.roundTo(r.getDouble(2 + i) / cnt, 6))
-            (ci, cnt, cs)
-          case None => (ci, 0L, centers(ci))
-        }
-      }.toArray
-      centers = last.map(_._3).toSeq
-      it += 1
-    }
+    val fit = KMeans.lloyd(Tables.lineitem(spark, sfDir), kmeansCols, init, iterations,
+      KMeans.SquaredEuclidean)
     import spark.implicits._
-    last.map { case (c, n, cs) => (c, n, cs(0), cs(1), cs(2), cs(3)) }
-      .toSeq.toDF("cluster", "cnt", "c0", "c1", "c2", "c3")
+    fit.counts.indices.map { c =>
+      val cs = fit.centers(c)
+      (c, fit.counts(c), cs(0), cs(1), cs(2), cs(3))
+    }.toDF("cluster", "cnt", "c0", "c1", "c2", "c3")
   }
 
   val oracle = {

@@ -10,8 +10,6 @@ object P1Probe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.local()
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.operators.ConnectedComponents", org.apache.logging.log4j.Level.INFO)
     // warm codegen on the small SF, then time the sf-dir build fresh
     P1CleanCorpus.runOn(spark, graft.Tables.documents(spark, dir.replaceAll("sf[0-9.]+$", "sf0.001")))
       .write.mode("overwrite").format("noop").save()

@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   * vec_id — working set proportional to the edge list, contributions
   * partially aggregated map-side, nothing driver-side but the loop counter
   * (rank frames stay distributed; only the O(P) metadata of the d5 stage
-  * ever visits the driver). The declared query runs 5 lazy rounds (lineage
-  * bounded by the fixed budget, matching the unrolled oracle); longer
-  * budgets — the reference defaults to 50 iterations — route the same step
-  * through Lineage.loop's RDD-boundary truncation via the
-  * `rounds`/`truncateEvery` knobs, keeping the plan constant-size.
+  * ever visits the driver). The rounds go through Lineage.loop: the
+  * declared 5 rounds are one lazy plan (matching the unrolled oracle);
+  * a longer `rounds` budget — the reference defaults to 50 iterations —
+  * crosses the engine's round boundary every 5 rounds, so the plan never
+  * embeds more than 5 steps and the rank frame keeps its partitioning.
   *
   * Determinism: contribution sums are rounded to 9 decimals each round
   * BEFORE damping (the s6 per-iteration-rounding precedent), so
@@ -47,14 +47,11 @@ object G1PageRank extends GraftQuery {
     * default is d5's exact pairs; feed D16's LSH-verified pairs for the
     * bucketed scale path.
     *
-    * `rounds`/`truncateEvery` expose the iteration budget and the lineage
-    * cadence ([[graft.operators.Lineage.loop]]): the declared 5-round query
-    * keeps cadence 0 (lazy composition, matching the unrolled oracle SQL);
-    * a reference-budget 50-round run sets cadence ≥ 1 so the plan stays
-    * constant-size (LineageHygieneSpec pins flat per-round cost at 50).
+    * `rounds` is the iteration budget ([[graft.operators.Lineage.loop]]);
+    * LineageHygieneSpec runs it at the reference's 50.
     */
   def runOverPairs(spark: SparkSession, pairs: DataFrame,
-      rounds: Int = iterations, truncateEvery: Int = 0): DataFrame = {
+      rounds: Int = iterations): DataFrame = {
     // Persist the pair SOURCE first: it is referenced twice by the
     // direction union, and `deg` (itself read by the adjacency build AND
     // the final join) multiplies the references further — without the cache
@@ -74,7 +71,7 @@ object G1PageRank extends GraftQuery {
 
     val init = adj.select(col("src").as("id")).distinct()
       .withColumn("pr", round(lit(1.0 / n), roundScale))
-    val ranks = graft.operators.Lineage.loop(spark, init, rounds, truncateEvery) { prev =>
+    val ranks = graft.operators.Lineage.loop(init, rounds) { prev =>
       adj.join(prev, adj("src") === prev("id"))
         .groupBy(col("dst"))
         .agg(round(sum(col("pr") / col("deg")), roundScale).as("mass"))

@@ -177,6 +177,16 @@ object Registry {
     all.find(_.name == name).getOrElse(
       throw new NoSuchElementException(s"unknown query: $name"))
 
+  /** The queries a main runs: every registered one for `None`, else those
+    * named in the comma list (`$SPARK_GRAFT_QUERIES`), in Registry order.
+    * An unknown name throws [[byName]]'s NoSuchElementException, so a typo
+    * fails instead of silently running nothing.
+    */
+  def select(csv: Option[String]): Seq[GraftQuery] = csv.fold(all) { list =>
+    val want = list.split(',').map(_.trim).filter(_.nonEmpty).map(byName).toSet
+    all.filter(want)
+  }
+
   /** Force-build every [[graft.Materialize]] shared stage for `sfDir`
     * (no-op when sharing is disabled). Bench calls this UNTIMED before each
     * measured pass set so the one-time stage builds land in the reported

@@ -8,34 +8,41 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningC
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Lineage truncation that PRESERVES the physical plan's output
-  * partitioning — `Dataset.checkpoint`'s construction with `persist`
-  * substituted for the checkpoint.
+/** The engine's round boundary: lineage truncation that PRESERVES the
+  * physical plan's output partitioning — `Dataset.checkpoint`'s
+  * construction with `persist` substituted for the checkpoint, plus an
+  * optional `localCheckpoint` of the persisted rows.
   *
-  * Why it exists (optimization round 16, guide §2.4, VERDICT r15 #3): the
-  * iterative engines (ConnectedComponents' label loop) must truncate the
-  * Catalyst plan every round or it embeds all prior rounds; the round-14
-  * form did that through `df.rdd` + `createDataFrame(rdd, schema)`, which
-  * cuts the lineage but ERASES the partitioning — Catalyst sees an opaque
-  * scan, so the next round's `labels ⨝ cand ON node` re-shuffled the ENTIRE
-  * label table every round even though it was already hash-partitioned by
-  * node. `localCheckpoint` would preserve the partitioning (it wraps the
-  * executed RDD in a [[LogicalRDD]] carrying `outputPartitioning`) but
-  * sacrifices recomputability on executor loss. This helper does exactly
-  * what `Dataset.checkpoint` does — execute the physical plan, wrap the
-  * InternalRow RDD in a [[LogicalRDD]] via the same `fromDataset` rewrite
-  * (which maps the physical partitioning/ordering expressions onto the new
-  * plan's attributes) — but persists the RDD instead of checkpointing it,
-  * so the lineage (and with it recomputability) survives while the
-  * planner keeps seeing `HashPartitioning(node)`.
+  * Why it exists (optimization round 16): an iterative loop must truncate
+  * the Catalyst plan between rounds or it embeds all prior rounds; the
+  * round-14 form did that through `df.rdd` +
+  * `createDataFrame(rdd, schema)`, which cuts the lineage but ERASES the
+  * partitioning — Catalyst sees an opaque scan, so ConnectedComponents'
+  * next-round `labels ⨝ cand ON node` re-shuffled the ENTIRE label table
+  * every round even though it was already hash-partitioned by node. This
+  * helper does what `Dataset.checkpoint` does — execute the physical plan
+  * and wrap the InternalRow RDD in a [[LogicalRDD]] that carries the plan's
+  * partitioning and ordering — so the planner keeps seeing
+  * `HashPartitioning(node)`.
+  *
+  * Two callers, two choices of `localCheckpoint`:
+  *   - `false` (ConnectedComponents): persist only. The RDD lineage stays,
+  *     so a lost partition is recomputed, but it grows every round: fine
+  *     for loops that converge in a few rounds, not for long ones (a
+  *     persist-only boundary measured 257–263 RDDs deep after 50 rounds,
+  *     and a longer loop threw `StackOverflowError` deserializing tasks).
+  *   - `true` ([[graft.operators.Lineage.loop]]): the persisted RDD is also
+  *     local-checkpointed, so its dependencies are cleared once it is
+  *     materialized and the shipped RDD graph stays O(rounds between
+  *     boundaries) forever. The cost is the checkpoint contract: on
+  *     executor loss the checkpointed partitions are unrecoverable and the
+  *     JOB fails (a retry restarts the loop from its driver-side state). A
+  *     cluster that wants lineage-free recovery swaps in reliable
+  *     `rdd.checkpoint` against an HDFS checkpoint dir here, in one line.
   *
   * The `.map(_.copy())` is load-bearing: operators reuse UnsafeRow buffers,
   * so persisting the raw iterator would alias every row in a partition to
   * the last buffer state.
-  *
-  * Only for loops that converge in a few rounds, like CC: the RDD lineage
-  * still grows every round (persist does not cut it), so long loops need
-  * `localCheckpoint`.
   */
 object PersistedTruncate {
 
@@ -65,9 +72,12 @@ object PersistedTruncate {
     }
   }
 
-  /** Execute `df`, persist its rows at `level`, and return a DataFrame over
-    * the persisted RDD that still advertises the plan's output partitioning
-    * plus the RDD handle for precise unpersist.
+  /** Execute `df`, persist its rows (MEMORY_AND_DISK), local-checkpoint
+    * them when `localCheckpoint` is set, and return a DataFrame over the
+    * persisted RDD that still advertises the plan's output partitioning
+    * plus the RDD handle for precise unpersist. The rows are computed by
+    * the caller's next action on either (which, with `localCheckpoint`,
+    * also cuts the RDD's dependencies).
     *
     * Deliberately NOT `LogicalRDD.fromDataset`: that helper forwards the
     * ORIGIN plan's statistics into the new leaf, so an iterative caller's
@@ -80,8 +90,7 @@ object PersistedTruncate {
     * exactly the stats behavior of the `createDataFrame(rdd, schema)`
     * boundary this replaces — while keeping the partitioning.
     */
-  def truncate(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow]) = {
+  def truncate(df: DataFrame, localCheckpoint: Boolean): (DataFrame, RDD[InternalRow]) = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val spark = ds.sparkSession
     // Under AQE the executedPlan is AdaptiveSparkPlanExec — a LeafExecNode
@@ -92,7 +101,8 @@ object PersistedTruncate {
     // for the old df.rdd boundary — and the partitioning must then be
     // read from the FINAL physical plan inside it.
     val physical = ds.queryExecution.executedPlan
-    val internal = physical.execute().map(_.copy()).persist(level)
+    val internal = physical.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    if (localCheckpoint) internal.localCheckpoint()
     val finalPlan = physical match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan

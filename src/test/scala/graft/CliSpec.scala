@@ -174,6 +174,28 @@ class CliSpec extends AnyFunSuite {
     }.getMessage.contains("requires -o"))
   }
 
+  test("suite runs release each query's caches and keep the caller's") {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    import spark.implicits._
+    // An application-owned cache that must survive the suite.
+    val mine = Seq(1, 2, 3).toDF("x").persist()
+    mine.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Files.createTempDirectory("graft-cli-caches").toString
+    // d4 persists its hashed-shingle frame; d7 runs d4 inside and persists
+    // its pair list.
+    Cli.runWith(spark, Array("-i", sf, "-o", out, "-q", "d4_ngram_jaccard,d7_dup_clusters"))
+    assert(spark.read.parquet(s"$out/d7_dup_clusters.parquet").count() > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      s"suite left caches: before=$before after=${spark.sparkContext.getPersistentRDDs.keySet}")
+    // storageLevel is read from the CacheManager entry
+    assert(mine.storageLevel.useMemory, "suite swept the caller's cache")
+    mine.unpersist(blocking = true)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "suite left SQL CacheManager entries registered")
+  }
+
   test("-c caps iterative driver loops for the invocation only; malformed -c refused") {
     val q = "q9_kmeans_loop"
     val full = Cli.runWith(spark, Array("-i", sf, "-q", q)).get.collect().toSeq

@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Builds [[GraftSession.local]] and prints one `SESSION` line: master,
+/** Builds [[GraftSession.local]] and prints one `SESSION` line (master,
   * shuffle partitions, session time zone, `nanosAsLong` and whether AQE is
-  * on. Runs in a child JVM ([[ChildJvm]]): the test JVM already has its
-  * session.
+  * on) and one `LOGGERS` line (the root level and the ConnectedComponents
+  * logger's level). Runs in a child JVM ([[ChildJvm]]): the test JVM
+  * already has its session.
   */
 object GraftSessionLocalMain {
   def main(args: Array[String]): Unit = {
@@ -14,6 +15,10 @@ object GraftSessionLocalMain {
     println(Seq(spark.sparkContext.master, conf.get("spark.sql.shuffle.partitions"),
       conf.get("spark.sql.session.timeZone"), conf.get("spark.sql.legacy.parquet.nanosAsLong"),
       conf.get("spark.sql.adaptive.enabled")).mkString("SESSION ", " ", ""))
+    import org.apache.logging.log4j.LogManager
+    println(Seq(LogManager.getRootLogger.getLevel,
+      LogManager.getLogger("graft.operators.ConnectedComponents").getLevel)
+      .mkString("LOGGERS ", " ", ""))
     spark.stop()
   }
 }
@@ -22,17 +27,20 @@ class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("local() builds local[$SPARK_GRAFT_CPUS] and takes other settings from -D options") {
-    def session(jvmOptions: Seq[String]): String = {
+    def session(jvmOptions: Seq[String]): Seq[String] = {
       val out = ChildJvm.run("graft.GraftSessionLocalMain", Nil,
         jvmOptions = jvmOptions, env = Map("SPARK_GRAFT_CPUS" -> "3"))
-      val line = out.output.linesIterator.find(_.startsWith("SESSION "))
-      assert(out.exitCode == 0 && line.isDefined,
+      val lines = out.output.linesIterator
+        .filter(l => l.startsWith("SESSION ") || l.startsWith("LOGGERS ")).toSeq
+      assert(out.exitCode == 0 && lines.size == 2,
         s"child JVM failed:\n${out.output.takeRight(4000)}")
-      line.get
+      lines
     }
+    // The root logger stays at WARN; the engine's own loggers stay at INFO,
+    // so a run's log shows which ConnectedComponents path ran.
     assert(session(Seq("-Dspark.sql.adaptive.enabled=false")) ==
-      "SESSION local[3] 3 UTC true false")
-    assert(session(Nil) == "SESSION local[3] 3 UTC true true")
+      Seq("SESSION local[3] 3 UTC true false", "LOGGERS WARN INFO"))
+    assert(session(Nil) == Seq("SESSION local[3] 3 UTC true true", "LOGGERS WARN INFO"))
   }
 
   test("plain SQL runs against registered views and custom functions") {

@@ -23,7 +23,7 @@ class KMeansSpec extends AnyFunSuite {
   test("lloyd recovers well-separated blob centers (squared-Euclidean)") {
     val got = KMeans.lloyd(blobs, Seq(col("x"), col("y")),
       init = Seq(Seq(1.0, 1.0), Seq(8.0, 8.0), Seq(-8.0, 6.0)),
-      iterations = 5, d = KMeans.SquaredEuclidean)
+      iterations = 5, d = KMeans.SquaredEuclidean).centers
     val want = Seq(Seq(0.0, 0.0), Seq(10.0, 10.0), Seq(-10.0, 8.0))
     got.zip(want).foreach { case (g, w) =>
       val dist = math.sqrt(g.zip(w).map { case (a, b) => (a - b) * (a - b) }.sum)
@@ -66,7 +66,7 @@ class KMeansSpec extends AnyFunSuite {
     val df = Seq((0.0, 0.0), (1.0, 1.0)).toDF("x", "y")
     val got = KMeans.lloyd(df, Seq(col("x"), col("y")),
       init = Seq(Seq(0.5, 0.5), Seq(1000.0, 1000.0)),
-      iterations = 2, d = KMeans.SquaredEuclidean)
+      iterations = 2, d = KMeans.SquaredEuclidean).centers
     assert(got(1) == Seq(1000.0, 1000.0))
   }
 }

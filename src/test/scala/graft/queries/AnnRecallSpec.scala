@@ -45,7 +45,7 @@ class AnnRecallSpec extends AnyFunSuite {
     val init = e.filter(col("vec_id") >= 100L && col("vec_id") < 116L)
       .orderBy(col("vec_id")).collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val centers = KMeans.lloyd(e.toDF(), feats, init, iterations = 3, KMeans.Cosine)
+    val centers = KMeans.lloyd(e.toDF(), feats, init, iterations = 3, KMeans.Cosine).centers
     // Assignment by the engine's own argmin-distance expression.
     val assigned = e.select(col("vec_id"), col("embedding"),
       KMeans.assign(feats, centers, KMeans.Cosine).as("list"))

@@ -32,6 +32,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(names.distinct.length == names.length)
   }
 
+  test("select keeps Registry order and takes every query without a list") {
+    assert(Registry.select(None) == Registry.all)
+    assert(Registry.select(Some(" q9_kmeans_loop,q1_agg ,,q9_kmeans_loop")) ==
+      Seq(Q1Agg, Q9KMeansLoop))
+  }
+
+  test("select fails on an unknown name instead of running nothing") {
+    val e = intercept[NoSuchElementException] {
+      Registry.select(Some("q1_agg,q1_aggg"))
+    }
+    assert(e.getMessage.contains("q1_aggg"))
+  }
+
   test("oracleOnly marks exactly the declared exact-twin set") {
     // These six are exact-by-construction recall oracles; each must name a
     // bucketed scale twin that IS in the default (100-TB-safe) surface.
