@@ -157,28 +157,36 @@ object Cli {
       dProps.map { case (k, _) => (k, spark.conf.getOption(k)) }
     try graft.core.IterationBudget.withCap(iterCap) {
       dProps.foreach { case (k, v) => spark.conf.set(k, v) }
-      if (names.size == 1) {
-        val df = SparkEntry.queries(names.head)(spark, input)
-        opts.get("o").foreach { out =>
-          df.write.mode("overwrite").parquet(s"$out/${names.head}.parquet")
-        }
-        // Embedding API + invocation-scoped knobs: without -o the returned
-        // frame would otherwise execute lazily AFTER this block's finally
-        // restored the -D confs and released the -c cap — silently violating
-        // "live for this invocation". So when either knob is set, pin the
-        // result INSIDE the scope: persist + count materializes every
-        // partition while the confs/cap are in effect, and later actions on
-        // the returned frame read the cached rows rather than re-planning
-        // under restored confs. (The caller may unpersist when done; under
-        // cache-eviction pressure a recompute would see restored confs —
-        // acceptable for the single-JVM embedding shape this API serves,
-        // and -o remains the durable form.)
-        if (opts.get("o").isEmpty && (dProps.nonEmpty || iterCap.nonEmpty)) {
-          df.persist()
-          df.count()
-          ()
-        }
-        Some(df)
+      if (names.size == 1) opts.get("o") match {
+        case Some(out) =>
+          // Run managed, like a suite query below: the caches the query
+          // made are released once it is written, and the returned frame
+          // reads the written result.
+          val path = s"$out/${names.head}.parquet"
+          Registry.byName(names.head).runManaged(spark, input)(
+            _.write.mode("overwrite").parquet(path))
+          Some(spark.read.parquet(path))
+        case None =>
+          // Unmanaged: the returned frame may still read the caches the query
+          // made, so they stay for the caller.
+          val df = SparkEntry.queries(names.head)(spark, input)
+          // Embedding API + invocation-scoped knobs: without -o the returned
+          // frame would otherwise execute lazily AFTER this block's finally
+          // restored the -D confs and released the -c cap — silently violating
+          // "live for this invocation". So when either knob is set, pin the
+          // result INSIDE the scope: persist + count materializes every
+          // partition while the confs/cap are in effect, and later actions on
+          // the returned frame read the cached rows rather than re-planning
+          // under restored confs. (The caller may unpersist when done; under
+          // cache-eviction pressure a recompute would see restored confs —
+          // acceptable for the single-JVM embedding shape this API serves,
+          // and -o remains the durable form.)
+          if (dProps.nonEmpty || iterCap.nonEmpty) {
+            df.persist()
+            df.count()
+            ()
+          }
+          Some(df)
       } else {
         val out = opts("o")
         // Per-query isolation (Verify's contract: one failing query never

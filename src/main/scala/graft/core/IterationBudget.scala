@@ -13,7 +13,7 @@ package graft.core
   * operator asked for; the oracle gate never runs with a cap set.
   *
   * Consulted by every iterative driver loop: [[Iterate.run]] (the kernel —
-  * q2/q3/q4/C6), KMeans.lloyd (q9), and the epoch loops of k1/k2/k3
+  * q2/q3/q4/C6, k1 and KMeans.lloyd (q9)), and the epoch loops of k2/k3/k4
   * and g1/g3. Set/cleared by `graft.Cli` around one invocation
   * ([[withCap]]); plain library callers pass iteration counts explicitly
   * and never touch this.

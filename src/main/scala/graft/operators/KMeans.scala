@@ -3,26 +3,31 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Spark-first k-means building blocks reproducing the reference's
-  * semantics (guagua-examples/.../kmeans/KMeansWorker.java:107-245,
-  * KMeansMaster.java:49-160) as declarative plans:
+import graft.core.{Iterate, IterationContext, MasterComputable, WorkerComputable}
+
+/** k-means reproducing the reference's semantics
+  * (guagua-examples/.../kmeans/KMeansWorker.java:107-245,
+  * KMeansMaster.java:49-160):
   *
-  *   - assignment = a codegen'd when-chain argmin over explicit distance
-  *     expressions (no UDF, no crossJoin — stays inside WholeStageCodegen);
-  *   - per-cluster sums/counts = one partial+final hash aggregate;
-  *   - the Lloyd iteration = a driver loop collecting k rows per step (the
-  *     master fold of KMeansMaster.java:99-160 — k×dims doubles, O(1) in
-  *     data size).
-  *
-  * Scale: each iteration is scan → map → partial agg → final agg over k
-  * groups; the shuffle moves k rows per upstream partition. Centers travel
-  * as plan literals (they're tiny); at 1000 executors this is exactly the
-  * shape MLlib uses, minus its extra persist of an intermediate RDD.
+  *   - the Lloyd loop ([[lloyd]]) runs on the [[graft.core.Iterate]] kernel,
+  *     the reference's own master/worker shape: the feature columns are
+  *     projected once into one `array<double>` column that the kernel
+  *     persists; per iteration each worker folds its cached partition into
+  *     per-cluster counts and feature sums given the last centers, and the
+  *     master folds those in partition order into the next centers
+  *     (KMeansMaster.java:99-160 — k×dims doubles, O(1) in data size);
+  *   - the centers travel in the kernel's per-iteration broadcast, not as
+  *     plan literals, so one plan is analysed and code-generated per loop,
+  *     not per iteration;
+  *   - single-step assignment (q5, the SQL mirrors) stays declarative: a
+  *     codegen'd when-chain argmin over explicit distance expressions (no
+  *     UDF, no crossJoin — stays inside WholeStageCodegen).
   *
   * Determinism-for-oracle: every distance is pure +,*,/,sqrt (all IEEE
-  * exactly-rounded, so Spark and DuckDB compute bit-identical doubles);
-  * updated centers are rounded to a fixed number of decimals each iteration
-  * so summation-order noise cannot drift the trajectories apart.
+  * exactly-rounded, so Spark, the Lloyd worker and DuckDB compute
+  * bit-identical doubles — the worker keeps [[distanceTo]]'s operation
+  * order); updated centers are rounded to a fixed number of decimals each
+  * iteration so summation-order noise cannot drift the trajectories apart.
   */
 object KMeans {
 
@@ -64,12 +69,47 @@ object KMeans {
     (array_position(arr, array_min(arr)) - 1).cast("int")
   }
 
-  /** One Lloyd step: per-cluster counts and feature sums. */
-  def step(df: DataFrame, features: Seq[Column], centers: Seq[Seq[Double]], d: Distance): DataFrame = {
-    val dims = features.indices
-    df.select(assign(features, centers, d).as("cluster") +: dims.map(i => features(i).as(s"f$i")): _*)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("cnt"), dims.map(i => sum(col(s"f$i")).as(s"sum_f$i")): _*)
+  /** The argmin of [[assign]] over plain arrays: the nearest of `centers`
+    * to a feature row, with [[distanceTo]]'s IEEE operation order and the
+    * when-chain's tie rule (the first minimum — the strict `<` scan of
+    * KMeansWorker.java:151-163). The Lloyd worker assigns with it; callers
+    * that hold many centers use it instead of an O(k²) when-chain.
+    */
+  def nearest(centers: Seq[Seq[Double]], d: Distance): Array[Double] => Int =
+    new Nearest(centers.map(_.toArray).toArray, d)
+
+  private final class Nearest(cs: Array[Array[Double]], d: Distance)
+      extends (Array[Double] => Int) with Serializable {
+    private val norms = cs.map(c => math.sqrt(c.map(x => x * x).sum))
+
+    private def distance(x: Array[Double], ci: Int): Double = {
+      val c = cs(ci)
+      d match {
+        case SquaredEuclidean =>
+          var s = (x(0) - c(0)) * (x(0) - c(0))
+          var i = 1
+          while (i < c.length) { s += (x(i) - c(i)) * (x(i) - c(i)); i += 1 }
+          s
+        case Cosine =>
+          var dot = x(0) * c(0)
+          var xx = x(0) * x(0)
+          var i = 1
+          while (i < c.length) { dot += x(i) * c(i); xx += x(i) * x(i); i += 1 }
+          1.0 - dot / (math.sqrt(xx) * norms(ci))
+      }
+    }
+
+    def apply(x: Array[Double]): Int = {
+      var best = 0
+      var bestD = distance(x, 0)
+      var ci = 1
+      while (ci < cs.length) {
+        val di = distance(x, ci)
+        if (di < bestD) { best = ci; bestD = di }
+        ci += 1
+      }
+      best
+    }
   }
 
   /** A Lloyd run's result: the final centers and the last iteration's
@@ -78,9 +118,59 @@ object KMeans {
     */
   final case class Fit(centers: Seq[Seq[Double]], counts: Seq[Long])
 
-  /** Full Lloyd loop with per-iteration center rounding (determinism knob).
-    * Empty clusters keep their previous center (cannot happen on the pinned
-    * query surface; guarded for library use).
+  /** One worker's per-cluster row counts and feature sums (cluster-major,
+    * `dims` sums per cluster); merged element-wise in partition order.
+    */
+  private final case class Partial(counts: Array[Long], sums: Array[Double]) {
+    def merge(o: Partial): Partial =
+      Partial(counts.zip(o.counts).map { case (a, b) => a + b },
+        sums.zip(o.sums).map { case (a, b) => a + b })
+  }
+
+  private final class LloydWorker(init: Seq[Seq[Double]], d: Distance)
+      extends WorkerComputable[Array[Double], Fit, Partial] {
+    def compute(rows: Iterator[Array[Double]], last: Option[Fit],
+        ctx: IterationContext): Partial = {
+      val centers = last.fold(init)(_.centers)
+      val near = nearest(centers, d)
+      val dims = init.head.length
+      val counts = new Array[Long](centers.length)
+      val sums = new Array[Double](centers.length * dims)
+      rows.foreach { x =>
+        val ci = near(x)
+        counts(ci) += 1
+        var i = 0
+        while (i < dims) { sums(ci * dims + i) += x(i); i += 1 }
+      }
+      Partial(counts, sums)
+    }
+  }
+
+  /** New center = the rounded mean of its cluster; an empty cluster keeps
+    * its previous center (cannot happen on the pinned query surface;
+    * guarded for library use).
+    */
+  private final class LloydMaster(init: Seq[Seq[Double]], roundDecimals: Int)
+      extends MasterComputable[Fit, Partial] {
+    def compute(results: Iterator[Partial], last: Option[Fit], ctx: IterationContext): Fit = {
+      val p = results.next()
+      val dims = init.head.length
+      val centers = last.fold(init)(_.centers).zipWithIndex.map { case (old, ci) =>
+        val n = p.counts(ci)
+        if (n == 0) old
+        else (0 until dims).map(i =>
+          graft.functions.Rounding.roundTo(p.sums(ci * dims + i) / n, roundDecimals))
+      }
+      Fit(centers, p.counts.toSeq)
+    }
+  }
+
+  /** Full Lloyd loop with per-iteration center rounding (determinism knob),
+    * on the [[graft.core.Iterate]] kernel, so the CLI's `-c` caps it through
+    * [[graft.core.IterationBudget]]. `features` must be non-null doubles;
+    * `df` is read once into the kernel's cache (a `df` the caller persisted
+    * is read from that cache and stays persisted), and like any kernel
+    * input it needs at least one partition.
     */
   def lloyd(
       df: DataFrame,
@@ -89,30 +179,17 @@ object KMeans {
       iterations: Int,
       d: Distance,
       roundDecimals: Int = 6): Fit = {
-    val dims = features.indices
-    var fit = Fit(init, Nil)
-    var it = 0
-    // CLI `-c` cap (graft.core.IterationBudget): min(declared, cap).
-    val effIterations = graft.core.IterationBudget.effective(iterations)
-    while (it < effIterations) {
-      val rows = step(df, features, fit.centers, d).collect()
-      val byCluster = rows.map(r => r.getInt(0) -> r).toMap
-      val next = fit.centers.zipWithIndex.map { case (old, ci) =>
-        byCluster.get(ci) match {
-          case Some(r) =>
-            val cnt = r.getLong(1)
-            (dims.map(i => round10(r.getDouble(2 + i) / cnt, roundDecimals)), cnt)
-          case None => (old, 0L)
-        }
-      }
-      fit = Fit(next.map(_._1), next.map(_._2))
-      it += 1
+    require(init.nonEmpty && init.forall(_.length == features.length),
+      s"lloyd: every initial center needs ${features.length} coordinates")
+    if (iterations <= 0) Fit(init, Nil)
+    else {
+      import df.sparkSession.implicits._
+      val rows = df.select(array(features: _*).cast("array<double>")).as[Array[Double]]
+      Iterate.run[Array[Double], Fit, Partial](
+        rows, new LloydWorker(init, d), new LloydMaster(init, roundDecimals),
+        maxIterations = iterations, combine = Some(_ merge _)).master
     }
-    fit
   }
-
-  private def round10(x: Double, decimals: Int): Double =
-    graft.functions.Rounding.roundTo(x, decimals)
 
   // ---- SQL mirrors (for oracle generation; keep in lockstep with above) ----
 

@@ -1,15 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.array
 
 import graft.Tables
+import graft.core.{Iterate, IterationContext, MasterComputable, WorkerComputable}
+import graft.operators.GradientDescent.GradPayload
 import graft.operators.KMeans.sqlLit
 
 /** k1: the FULL logistic-regression training loop (reference C4,
   * LogisticRegressionMaster/Worker) — 5 averaged-gradient steps over the
-  * lineitem feature projection, declarative per-iteration aggregates with
-  * the weight update in the driver.
+  * lineitem feature projection, on the [[graft.core.Iterate]] kernel.
   *
   * The oracle is the loop UNROLLED into chained CTEs: each iteration's
   * 1-row weights relation cross-joins into the next gradient aggregate
@@ -17,9 +18,16 @@ import graft.operators.KMeans.sqlLit
   * per-iteration gradients round to 6 decimals and weights to 6 decimals on
   * BOTH sides, so summation-order noise cannot drift the trajectories.
   *
-  * Per iteration this is one scan + one codegen'd aggregate returning 5
-  * doubles to the driver — the whole training loop moves O(dims) data per
-  * pass regardless of corpus size.
+  * The features and the label are projected once into one `array<double>`
+  * column, which the kernel persists; per iteration each worker folds its
+  * cached partition into Σ err·fⱼ and a row count given the weights in the
+  * kernel's broadcast, and the master folds the partitions in order — the
+  * whole training loop moves O(dims) data per pass and plans once.
+  *
+  * `GradientDescent.Worker` is not reused: its iteration 1 only initializes
+  * the weights, so 5 steps would take 6 kernel iterations and `-c n` would
+  * cap k1 at n − 1 steps; its sigmoid also uses `math.exp`, where Spark's
+  * (and so the oracle-pinned) `exp` is `StrictMath.exp`.
   */
 object K1LrLoop extends GraftQuery {
   val name = "k1_lr_loop"
@@ -37,25 +45,49 @@ object K1LrLoop extends GraftQuery {
 
   private def round6(x: Double): Double = graft.functions.Rounding.roundTo(x, 6)
 
-  /** One averaged-gradient aggregate at fixed weights. */
-  private def gradientStep(df: DataFrame, w: Seq[Double]): Array[Double] = {
-    import LineitemFeatures._
-    val err = sigmoidResidual(zExpr(w))
-    val aggs = gradCols.zipWithIndex.map { case (f, j) =>
-      round(sum(err * f) / count(lit(1)), 6).as(s"g$j")
+  /** Σ err·fⱼ and the row count over one partition of `f0..f4, y` rows, at
+    * the last weights. z sums `zExpr`'s terms left to right and err is
+    * `sigmoidResidual`'s, so each row's doubles equal the SQL twin's. The
+    * payload's `error` stays 0: k1 reports no loss.
+    */
+  private final class Worker extends WorkerComputable[Array[Double], Seq[Double], GradPayload] {
+    def compute(rows: Iterator[Array[Double]], last: Option[Seq[Double]],
+        ctx: IterationContext): GradPayload = {
+      val w = last.getOrElse(w0).toArray
+      val grad = new Array[Double](dims)
+      var n = 0L
+      rows.foreach { r =>
+        var z = r(0) * w(0)
+        var j = 1
+        while (j < dims) { z += r(j) * w(j); j += 1 }
+        val err = 1.0 / (1.0 + StrictMath.exp(-z)) - r(dims)
+        j = 0
+        while (j < dims) { grad(j) += err * r(j); j += 1 }
+        n += 1
+      }
+      GradPayload(grad, 0.0, n)
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    (0 until dims).map(row.getDouble).toArray
+  }
+
+  /** w ← round6(w − lr · round6(Σ / n)), the oracle's update. */
+  private object Master extends MasterComputable[Seq[Double], GradPayload] {
+    def compute(results: Iterator[GradPayload], last: Option[Seq[Double]],
+        ctx: IterationContext): Seq[Double] = {
+      val total = results.next()
+      last.getOrElse(w0).zip(total.grad).map { case (wi, gi) =>
+        round6(wi - lr * round6(gi / total.n))
+      }
+    }
   }
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = Tables.lineitem(spark, sfDir)
-    var w = w0
-    for (_ <- 1 to graft.core.IterationBudget.effective(iterations)) {
-      val g = gradientStep(li, w)
-      w = w.zip(g).map { case (wi, gi) => round6(wi - lr * gi) }
-    }
+    import LineitemFeatures._
     import spark.implicits._
+    val rows = Tables.lineitem(spark, sfDir)
+      .select(array(gradCols :+ labelCol: _*)).as[Array[Double]]
+    val w = Iterate.run[Array[Double], Seq[Double], GradPayload](
+      rows, new Worker, Master, maxIterations = iterations,
+      combine = Some(_ merge _)).master
     Seq((w(0), w(1), w(2), w(3), w(4)))
       .toDF("w0", "w1", "w2", "w3", "w4")
   }

@@ -27,14 +27,17 @@ object LineitemFeatures {
   val labelSql: String = "CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END"
 
   /** w·x at fixed weights — THE lockstep pair every gradient query builds
-    * on; any change must land in both forms at once.
+    * on; any change must land in both forms at once (and in k1's worker,
+    * which sums the same terms in the same order over plain arrays).
     */
   def zExpr(w: Seq[Double]): Column =
     gradCols.zip(w).map { case (f, wi) => f * lit(wi) }.reduce(_ + _)
   def zSql(wRefs: Seq[String]): String =
     gradSql.zip(wRefs).map { case (f, wi) => s"$f * $wi" }.mkString(" + ")
 
-  /** σ(z) − y, shared by q3's single step and k1's full loop. */
+  /** σ(z) − y, shared by k2's mini-batch loop and (in plain Scala, with
+    * Spark's `StrictMath.exp`) k1's worker.
+    */
   def sigmoidResidual(z: Column): Column =
     lit(1.0) / (lit(1.0) + exp(-z)) - labelCol
   def sigmoidResidualSql(z: String): String =

@@ -135,11 +135,12 @@ object K4QualityClassifier extends GraftQuery {
     (0 until dims).map(j => s"${sqlLit(w(j))} * $alias.f$j").mkString(" + ")
 
   /** The C4 training loop over a (cached) feature frame — one aggregate per
-    * iteration, O(dims) to the driver. Shared with the replay-parity spec.
+    * iteration, O(dims) to the driver, capped by the CLI's `-c`
+    * ([[graft.core.IterationBudget]]). Shared with the replay-parity spec.
     */
   private[graft] def trainedWeights(df: DataFrame): Seq[Double] = {
     var w: Seq[Double] = Seq.fill(dims)(0.0)
-    for (_ <- 1 to iterations) {
+    for (_ <- 1 to graft.core.IterationBudget.effective(iterations)) {
       val err = lit(1.0) / (lit(1.0) + exp(-zExpr(w))) -
         col("is_ref").cast("double")
       val aggs = (0 until dims).map(j =>

@@ -189,6 +189,12 @@ class CliSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/d7_dup_clusters.parquet").count() > 0)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       s"suite left caches: before=$before after=${spark.sparkContext.getPersistentRDDs.keySet}")
+    // A single query written with -o is run managed as well.
+    val single = Files.createTempDirectory("graft-cli-single").toString
+    Cli.runWith(spark, Array("-i", sf, "-o", single, "-q", "d4_ngram_jaccard"))
+    assert(spark.read.parquet(s"$single/d4_ngram_jaccard.parquet").count() > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      s"single query left caches: before=$before after=${spark.sparkContext.getPersistentRDDs.keySet}")
     // storageLevel is read from the CacheManager entry
     assert(mine.storageLevel.useMemory, "suite swept the caller's cache")
     mine.unpersist(blocking = true)

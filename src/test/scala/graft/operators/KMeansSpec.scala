@@ -46,6 +46,71 @@ class KMeansSpec extends AnyFunSuite {
     val tie = Seq((2.5, 2.5)).toDF("x", "y").select(
       KMeans.assign(feats, centers, KMeans.SquaredEuclidean).as("a")).head().getInt(0)
     assert(tie == 0)
+    // The Lloyd worker's plain-array argmin picks the same cluster, tie included.
+    val near = KMeans.nearest(centers, KMeans.SquaredEuclidean)
+    df.select(col("x"), col("y"),
+      KMeans.assign(feats, centers, KMeans.SquaredEuclidean).as("a")).collect()
+      .foreach(r => assert(near(Array(r.getDouble(0), r.getDouble(1))) == r.getInt(2)))
+    assert(near(Array(2.5, 2.5)) == 0)
+  }
+
+  test("lloyd with Cosine equals a plain-Scala Lloyd loop on the blobs") {
+    val df = blobs
+    val init = Seq(Seq(1.0, 0.2), Seq(0.3, 1.0), Seq(-1.0, 0.5))
+    val got = KMeans.lloyd(df, Seq(col("x"), col("y")), init, iterations = 4, d = KMeans.Cosine)
+    // The reference folds each partition in row order and the partitions in
+    // order, as the kernel's combiner does, so every sum is bit-equal.
+    val parts = df.rdd.glom().collect().map(_.map(r => Array(r.getDouble(0), r.getDouble(1))))
+    def cosDist(x: Array[Double], c: Seq[Double]): Double =
+      1.0 - (x(0) * c(0) + x(1) * c(1)) /
+        (math.sqrt(x(0) * x(0) + x(1) * x(1)) * math.sqrt(c(0) * c(0) + c(1) * c(1)))
+    var centers = init
+    var counts = Seq.empty[Long]
+    for (_ <- 1 to 4) {
+      val perPart = parts.map { rows =>
+        val sums = Array.fill(3, 2)(0.0)
+        val cnt = Array.fill(3)(0L)
+        rows.foreach { x =>
+          val ds = centers.map(cosDist(x, _))
+          val ci = ds.indexOf(ds.min)
+          cnt(ci) += 1
+          sums(ci)(0) += x(0)
+          sums(ci)(1) += x(1)
+        }
+        (cnt, sums)
+      }
+      val (cnt, sums) = perPart.reduce { (a, b) =>
+        (a._1.zip(b._1).map { case (u, v) => u + v },
+          a._2.zip(b._2).map { case (u, v) => u.zip(v).map { case (p, q) => p + q } })
+      }
+      centers = centers.indices.map { ci =>
+        if (cnt(ci) == 0) centers(ci)
+        else sums(ci).toSeq.map(s => graft.functions.Rounding.roundTo(s / cnt(ci), 6))
+      }
+      counts = cnt.toSeq
+    }
+    assert(got == KMeans.Fit(centers, counts))
+    assert(counts.sum == 300L)
+  }
+
+  test("lloyd with zero iterations returns the initial centers and no counts") {
+    val init = Seq(Seq(1.0, 1.0), Seq(8.0, 8.0))
+    assert(KMeans.lloyd(blobs, Seq(col("x"), col("y")), init, iterations = 0,
+      d = KMeans.SquaredEuclidean) == KMeans.Fit(init, Nil))
+  }
+
+  test("lloyd leaves no cache of its own and keeps the caller's") {
+    val sc = spark.sparkContext
+    val mine = blobs.persist()
+    mine.count()
+    val before = sc.getPersistentRDDs.keySet
+    KMeans.lloyd(mine, Seq(col("x"), col("y")), Seq(Seq(1.0, 1.0), Seq(8.0, 8.0)),
+      iterations = 2, d = KMeans.SquaredEuclidean)
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"lloyd left caches: ${sc.getPersistentRDDs.keySet -- before}")
+    assert(mine.storageLevel.useMemory, "lloyd unpersisted the caller's frame")
+    mine.unpersist(blocking = true)
+    ()
   }
 
   test("cosine distance matches a scalar reference implementation") {

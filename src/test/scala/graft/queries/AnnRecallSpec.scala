@@ -46,9 +46,11 @@ class AnnRecallSpec extends AnyFunSuite {
       .orderBy(col("vec_id")).collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
     val centers = KMeans.lloyd(e.toDF(), feats, init, iterations = 3, KMeans.Cosine).centers
-    // Assignment by the engine's own argmin-distance expression.
-    val assigned = e.select(col("vec_id"), col("embedding"),
-      KMeans.assign(feats, centers, KMeans.Cosine).as("list"))
+    // Assignment by the Lloyd worker's own argmin (KMeans.assign's tie
+    // rule), not a 16×64 when-chain.
+    val near = KMeans.nearest(centers, KMeans.Cosine)
+    val listOf = udf((v: Seq[Float]) => near(v.map(_.toDouble).toArray))
+    val assigned = e.select(col("vec_id"), col("embedding"), listOf(col("embedding")).as("list"))
     // Probe lists per query: 6 nearest trained centroids (driver-side over
     // 5×16 distances — metadata, like the kernel's master fold).
     def cosTo(v: Seq[Double], c: Seq[Double]): Double = {

@@ -14,20 +14,17 @@ import graft.TestSpark
 class QualityClassifierSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("distributed training equals a sequential replay of the same arithmetic") {
-    val f = K4QualityClassifier.features(spark, TestSpark.sf0001).cache()
-    val distributed = K4QualityClassifier.trainedWeights(f)
-
-    // Sequential replay: same features collected once, same quantized-mean
-    // gradient (exactAvg's scaled-long fold at grid 1e-10), same round-6
-    // weight update. Any divergence means the distributed aggregate is not
-    // the arithmetic it claims.
+  /** Sequential replay of `iterations` training steps: same features
+    * collected once, same quantized-mean gradient (exactAvg's scaled-long
+    * fold at grid 1e-10), same round-6 weight update.
+    */
+  private def replay(f: org.apache.spark.sql.DataFrame, iterations: Int): Seq[Double] = {
     val rows = f.collect().map { r =>
       (r.getBoolean(1), Array(r.getDouble(2), r.getDouble(3), r.getDouble(4),
         r.getDouble(5), r.getDouble(6)))
     }
     var w = Array.fill(5)(0.0)
-    for (_ <- 1 to K4QualityClassifier.iterations) {
+    for (_ <- 1 to iterations) {
       val sums = Array.fill(5)(0L)
       for ((isRef, fs) <- rows) {
         val z = (0 until 5).map(j => w(j) * fs(j)).sum
@@ -41,9 +38,30 @@ class QualityClassifierSpec extends AnyFunSuite {
       val g = sums.map(s => graft.functions.Rounding.roundTo(s.toDouble / n / 1e10, 6))
       w = w.zip(g).map { case (wi, gi) => graft.functions.Rounding.roundTo(wi - gi, 6) }
     }
+    w.toSeq
+  }
+
+  test("distributed training equals a sequential replay of the same arithmetic") {
+    val f = K4QualityClassifier.features(spark, TestSpark.sf0001).cache()
+    val distributed = K4QualityClassifier.trainedWeights(f)
+    // Any divergence means the distributed aggregate is not the arithmetic
+    // it claims.
+    val w = replay(f, K4QualityClassifier.iterations)
     f.unpersist()
-    assert(distributed == w.toSeq,
-      s"distributed $distributed != sequential replay ${w.toSeq}")
+    assert(distributed == w,
+      s"distributed $distributed != sequential replay $w")
+  }
+
+  test("the CLI's -c cap reaches the training loop") {
+    val f = K4QualityClassifier.features(spark, TestSpark.sf0001).cache()
+    val full = K4QualityClassifier.trainedWeights(f)
+    val capped = graft.core.IterationBudget.withCap(Some(1)) {
+      K4QualityClassifier.trainedWeights(f)
+    }
+    val one = replay(f, 1)
+    f.unpersist()
+    assert(capped != full, "-c 1 left the weights of the full run")
+    assert(capped == one, s"capped $capped != a 1-iteration run $one")
   }
 
   test("training moved the weights and scores are calibrated probabilities") {
