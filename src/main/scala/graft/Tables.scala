@@ -49,7 +49,7 @@ object Tables {
     *     Session TZ is pinned to UTC everywhere (GraftSession), so the cast
     *     reinterprets the same micros value without shifting the instant;
     *   - TimestampType: pass through.
-    * Every downstream consumer (j3, w1–w10, streaming twins) sees one stable
+    * Every downstream consumer (j3, w1–w10) sees one stable
     * contract: ts is TimestampType in UTC micros.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {

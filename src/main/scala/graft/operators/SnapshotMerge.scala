@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * within `delta`. A duplicated key fans out through the full-outer join
   * (every base match × every delta match) and silently multiplies output
   * rows. A raw CDC batch is NOT unique — run [[reduceDelta]] (highest-`seq`
-  * wins, the batch twin of UpsertStream's fold) before merging.
+  * wins) before merging.
   *
   * Scale: the join shuffles both sides on the merge key once. At 100 TB the
   * two cheaper regimes are (a) delta ≪ base — broadcast the delta (Spark
@@ -97,8 +97,7 @@ object SnapshotMerge {
   }
 
   /** Collapse a raw CDC batch to ONE row per key — the highest-`seqCol` row
-    * wins, exactly UpsertStream's per-key fold run as a batch: the
-    * uniqueness precondition [[merge]]/[[mergeCdc]] require, made
+    * wins: the uniqueness precondition [[merge]]/[[mergeCdc]] require, made
     * executable. `seqCol` must be unique per key (it is the CDC log offset),
     * so the winner is deterministic. One keyed shuffle (window over the
     * merge key); at scale this is the same partitioning the merge join

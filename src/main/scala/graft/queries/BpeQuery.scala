@@ -57,8 +57,8 @@ object T12BpeMerges extends GraftQuery {
   private[queries] val rounds = 6
   // Vocab symbols occupy chr(33)..chr(255) (rank is 1-based); merge symbols
   // chr(1)..chr(rounds) are control chars, disjoint by construction.
-  private val vocabBase = 32
-  private def mergeChar(r: Int): String = r.toChar.toString
+  private[queries] val vocabBase = 32
+  private[queries] def mergeChar(r: Int): String = r.toChar.toString
 
   def run(spark: SparkSession, sfDir: String): DataFrame =
     // Shared stage output, twinned with [[encodedCorpus]]: one training run
@@ -225,57 +225,6 @@ object T12BpeMerges extends GraftQuery {
     // `cur` used to carry; CacheScope owns the unpersist.
     val encoded = docs0.select(col("doc_id"), applyMerges(col("s")).as("s"))
     (out.result().toDF("round", "merged", "freq"), encoded)
-  }
-
-  /** The pre-round-16 FULL-RECOUNT training loop — every round re-explodes
-    * every document's pairs and re-persists the rewritten corpus — kept as
-    * the equality witness T12DeltaCountSpec compares the delta-maintained
-    * [[train]] against (the `gramHashesComposed` precedent): identical
-    * merge tables and identical encoded corpora on any input prove the
-    * per-round delta update equals the full recount.
-    */
-  private[queries] def trainRecountWitness(spark: SparkSession, documents: DataFrame)
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val toks = documents.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-    val vocabTokens = toks.select(explode(col("toks")).as("token")).distinct()
-      .collect().map(_.getString(0)).sorted
-    val tokenToCh = vocabTokens.zipWithIndex
-      .map { case (t, i) => t -> (vocabBase + i + 1).toChar.toString }
-    val symText = scala.collection.mutable.Map[String, String](
-      tokenToCh.map { case (t, ch) => ch -> t }.toSeq: _*)
-    val chMap = typedlit(tokenToCh.toMap)
-    val docs0 = CacheScope.persisted(
-      toks.where(size(col("toks")) >= 1)
-        .select(col("doc_id"),
-          array_join(transform(col("toks"), t => element_at(chMap, t)), "").as("s")))
-    var cur = docs0
-    var prev: DataFrame = null
-    val out = Seq.newBuilder[(Int, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val best = cur.where(length(col("s")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, length(s) - 1), i -> substring(s, i, 2))")).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("pair").asc)
-        .limit(1).collect()
-      if (prev ne null) prev.unpersist(false)
-      if (best.isEmpty) exhausted = true
-      else {
-        val pair = best(0).getAs[String]("pair")
-        val mc = mergeChar(r)
-        symText(mc) = symText(pair.substring(0, 1)) + " " + symText(pair.substring(1, 2))
-        out += ((r, symText(mc), best(0).getAs[Long]("freq")))
-        prev = cur
-        cur = CacheScope.persisted(
-          cur.select(col("doc_id"),
-            call_function("replace", col("s"), lit(pair), lit(mc)).as("s")))
-        r += 1
-      }
-    }
-    (out.result().toDF("round", "merged", "freq"), cur)
   }
 
   /** Unrolled-CTE replay (the k1 pattern). Every CTE referenced more than

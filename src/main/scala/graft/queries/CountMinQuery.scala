@@ -36,12 +36,9 @@ object T15CountMin extends GraftQuery {
     s"${Portable.hash60Sql(s"'cm$r:' || token")} % $width"
 
   /** The exploded (row, bucket) cell pairs for a `token` column — one
-    * increment per sketch row. Public because the STREAMING sketch is the
-    * same expression over an unbounded token stream (grouped streaming
-    * aggregation merges cells incrementally exactly as the batch shuffle
-    * does; StreamingSketchSpec pins the equality).
+    * increment per sketch row.
     */
-  def cells: org.apache.spark.sql.Column =
+  private def cells: org.apache.spark.sql.Column =
     explode(array((0 until depth).map(r =>
       struct(lit(r).as("r"), bucket(r).as("b"))): _*))
 

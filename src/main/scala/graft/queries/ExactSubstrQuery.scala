@@ -38,7 +38,7 @@ import graft.operators.TextOps
   * driver state, nothing resembling the paper's shared-memory suffix
   * array. At 100 TB: two shuffles (count, join) + one doc-bounded window.
   */
-private[graft] object ExactSubstr {
+private[queries] object ExactSubstr {
   /** Minimum verbatim run, in word tokens. The paper uses 50 BPE tokens on
     * web pages; the synthetic corpus averages ~54 word tokens per doc, so
     * the default keeps the same "about a fifth of a document" selectivity.

@@ -29,17 +29,16 @@ object T21MarkupStrip extends GraftQuery {
   val name = "t21_markup_strip"
   val describe = "markup strip: script-with-content removal, untag, entity decode, md5-pinned text"
 
-  // shared with EventStream.markupGate (the streaming twin) — one pattern
-  // set, so batch strip and the ingestion gate structurally cannot disagree
-  private[graft] val scriptRe = "<script>.*?</script>"
+  // one pattern set, read by the Column chain and the oracle SQL alike
+  private val scriptRe = "<script>.*?</script>"
   private val commentRe = "<!--.*?-->"
-  private[graft] val tagRe = "<[^>]+>"
+  private val tagRe = "<[^>]+>"
 
   /** The injected fixture document: the text's two halves wrapped in
     * elements, with hash-gated optional script/comment blocks and one
     * entity. Column form; the SQL mirror lives in [[htmlCte]].
     */
-  private[graft] def htmlCol(doc_id: Column, text: Column): Column = {
+  private[queries] def htmlCol(doc_id: Column, text: Column): Column = {
     val h = Portable.hash60(concat(lit("html:"), text))
     // integer halving on BOTH engines: Spark's double-div + cast truncates,
     // so the SQL mirror must use `//` (DuckDB CAST(x.5 AS INT) rounds)
@@ -72,11 +71,10 @@ object T21MarkupStrip extends GraftQuery {
   }
 
   /** The strip chain, Column form — script blocks (with content) → comments
-    * → tags → entities → whitespace collapse. Shared with
-    * [[graft.streaming.EventStream.markupGate]] (the ingestion-side twin);
-    * keep in lockstep with the SQL in [[oracle]].
+    * → tags → entities → whitespace collapse. Keep in lockstep with the SQL
+    * in [[oracle]].
     */
-  private[graft] def stripCol(html: Column): Column =
+  private[queries] def stripCol(html: Column): Column =
     trim(regexp_replace(
       regexp_replace(
         regexp_replace(

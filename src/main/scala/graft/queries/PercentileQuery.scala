@@ -75,17 +75,15 @@ object T25HistogramQuantiles extends GraftQuery {
 
   private[queries] val binCents = 12800L
 
-  /** (group, bin, c) histogram over lineitem prices — the mergeable state.
-    * private[graft]: EventStream.histogramBins is this same function on the
-    * unbounded frame. */
-  private[graft] def histogram(li: DataFrame): DataFrame =
+  /** (group, bin, c) histogram over lineitem prices — the mergeable state. */
+  private[queries] def histogram(li: DataFrame): DataFrame =
     li.select(col("l_returnflag"),
         expr(s"CAST(round(l_extendedprice * 100) AS BIGINT) div $binCents").as("bin"))
       .groupBy(col("l_returnflag"), col("bin"))
       .agg(count(lit(1)).as("c"))
 
   /** Histogram → per-group quantile rows (pure integer targets). */
-  private[graft] def quantiles(hist: DataFrame): DataFrame = {
+  private[queries] def quantiles(hist: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wc = Window.partitionBy(col("l_returnflag")).orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -61,12 +61,8 @@ object K4QualityClassifier extends GraftQuery {
 
   private def round6(x: Double): Double = graft.functions.Rounding.roundTo(x, 6)
 
-  /** The feature expressions f0..f4 over a text column — the ONE definition
-    * both the batch query and the streaming serve path
-    * ([[graft.streaming.EventStream.classifierGate]]) read, so trained
-    * weights always apply to the features they were trained on.
-    */
-  private[graft] def featureCols(text: Column): Seq[Column] = {
+  /** The feature expressions f0..f4 over a text column. */
+  private def featureCols(text: Column): Seq[Column] = {
     val toks = TextOps.tokens(text)
     // Divisors clamped to >= 1: an empty / whitespace-only doc has nChar=0
     // or nTok=0, and a NaN feature silently poisons the exactAvg gradient
@@ -90,19 +86,10 @@ object K4QualityClassifier extends GraftQuery {
       log(nTok + lit(1.0)) / lit(10.0))
   }
 
-  /** round(sigmoid(w·f(text)), 6) — the serve-side scorer for FIXED trained
-    * weights (stateless: composes with batch frames and streams alike).
-    */
-  private[graft] def scoreCol(w: Seq[Double], text: Column): Column = {
-    val z = featureCols(text).zipWithIndex
-      .map { case (f, j) => lit(w(j)) * f }.reduce(_ + _)
-    round(lit(1.0) / (lit(1.0) + exp(-z)), 6)
-  }
-
   /** Feature frame: (doc_id, is_ref label, f0..f4). One scan-bound
     * projection; cached by the caller for the training passes.
     */
-  private[graft] def features(spark: SparkSession, sfDir: String): DataFrame = {
+  private[queries] def features(spark: SparkSession, sfDir: String): DataFrame = {
     val fs = featureCols(col("text"))
     Tables.documents(spark, sfDir).select(
       col("doc_id") +:
@@ -138,7 +125,7 @@ object K4QualityClassifier extends GraftQuery {
     * iteration, O(dims) to the driver, capped by the CLI's `-c`
     * ([[graft.core.IterationBudget]]). Shared with the replay-parity spec.
     */
-  private[graft] def trainedWeights(df: DataFrame): Seq[Double] = {
+  private[queries] def trainedWeights(df: DataFrame): Seq[Double] = {
     var w: Seq[Double] = Seq.fill(dims)(0.0)
     for (_ <- 1 to graft.core.IterationBudget.effective(iterations)) {
       val err = lit(1.0) / (lit(1.0) + exp(-zExpr(w))) -
@@ -388,13 +375,8 @@ object K7UncertaintySample extends GraftQuery {
 
   private[queries] val n = 100
 
-  /** The uncertainty key over (score, threshold) columns — ONE definition,
-    * two surfaces: the batch selection below and the ingestion-time
-    * [[graft.streaming.EventStream.uncertaintyGate]], so the served key can
-    * never drift from the published queue's (the classifierGate no-skew
-    * discipline).
-    */
-  private[graft] def uncertCol(score: Column, thr: Column): Column =
+  /** The uncertainty key over (score, threshold) columns. */
+  private def uncertCol(score: Column, thr: Column): Column =
     round(abs(score - thr) * lit(1e6)).cast("long")
 
   /** The selection over arbitrary (doc_id, score) × 1-row (thr) frames —

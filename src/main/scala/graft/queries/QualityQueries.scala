@@ -22,11 +22,9 @@ object T8Repetition extends GraftQuery {
   val name = "t8_repetition"
   val describe = "repetition quality filters: dup-word fraction + top-bigram share (Gopher-style)"
 
-  /** Shared with the streaming gate (EventStream.qualityGate defaults) so
-    * the two surfaces can't drift apart.
-    */
-  private[graft] val dupWordMax = 0.6
-  private[graft] val topBigramMax = 0.1
+  /** Flag thresholds, read by the Column plan and the oracle SQL alike. */
+  private val dupWordMax = 0.6
+  private val topBigramMax = 0.1
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     // The token array feeds three derived columns and two consumer branches;

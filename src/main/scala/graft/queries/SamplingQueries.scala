@@ -66,12 +66,10 @@ object P13SplitManifest extends GraftQuery {
   private[queries] val trainCut = 98L
   private[queries] val valCut = 99L
 
-  /** The split verdict for a doc_id column — pure hash threshold, shared
-    * by the batch manifest and [[graft.streaming.EventStream.splitGate]]
-    * so batch assignment and at-ingestion routing structurally cannot
-    * disagree (the piiGate discipline).
+  /** The split verdict for a doc_id column — pure hash threshold, so a
+    * doc's split depends on its id alone.
     */
-  def splitCol(docId: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private def splitCol(docId: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val bucket = Portable.hash60(concat(lit("split:"), docId.cast("string"))) % lit(100L)
     when(bucket < trainCut, "train")
       .when(bucket < valCut, "val")
@@ -372,19 +370,17 @@ object S12PropensitySample extends GraftQuery {
   private val n = 200
   private val uGrid = 1048576L // 2^20: u = ((h mod uGrid)+1)/uGrid in (0, 1]
 
-  /** The exact-rational −ln(u)·1e6 term per doc — ONE definition, two
-    * surfaces (the batch selection below and the ingestion-time
-    * [[graft.streaming.EventStream.propensityGate]]): u is the 2^-20 hash
+  /** The exact-rational −ln(u)·1e6 term per doc: u is the 2^-20 hash
     * rational, the single ln snapped to the 1e6 grid BEFORE the weight
-    * division so the A-ES key is engine- and surface-identical.
+    * division so the A-ES key is engine-identical.
     */
-  private[graft] def negLnUE6(docId: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private def negLnUE6(docId: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val hmod = Portable.hash60(concat(lit("es:"), docId.cast("string"))) % lit(uGrid)
     round(-log((hmod + 1).cast("double") / lit(uGrid.toDouble)) * 1e6).cast("long")
   }
 
   /** The A-ES selection key: snapped −ln(u) over the clamped weight. */
-  private[graft] def keyE6(negLnU: org.apache.spark.sql.Column,
+  private def keyE6(negLnU: org.apache.spark.sql.Column,
       score: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(negLnU.cast("double") / greatest(score, lit(1e-6))).cast("long")
 
@@ -393,7 +389,7 @@ object S12PropensitySample extends GraftQuery {
     * scores span only 0.281–0.304, far too flat to exhibit the bias the
     * operator exists for).
     */
-  private[graft] def sampleOn(scored: DataFrame, n: Int): DataFrame =
+  private[queries] def sampleOn(scored: DataFrame, n: Int): DataFrame =
     scored
       .withColumn("neg_ln_u_e6", negLnUE6(col("doc_id")))
       .withColumn("key_e6", keyE6(col("neg_ln_u_e6"), col("score")))

@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** w1: 5-minute tumbling-window aggregation over the events table — the
-  * batch twin of the Structured Streaming pipeline in
-  * [[graft.streaming]] (same bucketing arithmetic), so the streaming path
-  * can be cross-checked against this oracle-verified query.
+/** w1: 5-minute tumbling-window aggregation over the events table.
   *
   * Bucketing is integer arithmetic on epoch seconds (Spark `unix_timestamp`
   * truncates, DuckDB `epoch` is fractional — hence the explicit floor).
@@ -18,7 +15,7 @@ import graft.Tables
   */
 object W1WindowAgg extends GraftQuery {
   val name = "w1_window_agg"
-  val describe = "5-min tumbling window counts/sums over events (batch twin of streaming agg)"
+  val describe = "5-min tumbling window counts/sums over events"
 
   private val widthSec = 300L
 
@@ -39,8 +36,7 @@ object W1WindowAgg extends GraftQuery {
 
 /** w2: sessionization — split each user's event stream at >30-minute gaps
   * (lag window), count sessions and events. The reference has no
-  * window/state operators at all (SURVEY §2.E); this is the batch form of
-  * the streaming `mapGroupsWithState` session operator.
+  * window/state operators at all (SURVEY §2.E).
   *
   * Scale: one shuffle on user_id (the window partition key), then a
   * per-partition sort — the standard sessionization shape. Skewed users
@@ -349,7 +345,7 @@ object W11VolumeAnomaly extends GraftQuery {
   /** The z-score table over any (event_type, day, cnt) frame — the seam
     * VolumeAnomalySpec's spike fixture and zero-sum pin use.
     */
-  private[graft] def zScores(daily: DataFrame): DataFrame = {
+  private[queries] def zScores(daily: DataFrame): DataFrame = {
     val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         sum(col("cnt")).as("s"),

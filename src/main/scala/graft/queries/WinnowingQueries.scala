@@ -58,9 +58,8 @@ private[graft] object Winnowing {
     // gram array binds ONCE through a single-element array (the TextOps
     // CollapseProject discipline — size() and the transform both read the
     // bound variable, so the md5 token-hash chain runs once per doc).
-    // WinnowGateStreamSpec had already proven the two formulations
-    // bit-equal; the DuckDB oracle keeps the window formulation, so the
-    // hash gate now pins the equivalence every round. Measured at the sf1
+    // The DuckDB oracle keeps the window formulation, so the hash gate
+    // pins the equivalence of the two formulations every round. Measured at the sf1
     // probe: stage build 16.8 s (window form, SCALE_SLOPE_r14) → 14.8 s —
     // the md5 gram-hash chain and the stage write dominate the build, so
     // removing the shuffle trims ~12% of wall; the structural win is the

@@ -12,7 +12,7 @@ import graft.queries.Winnowing
   * BIT-IDENTICAL to the per-window `array_min(slice(...))` combinator form
   * it replaced in the winnowing family — same minima at every window
   * position, same empty-array contract for short/null inputs — so
-  * t29/d20/d21 and the streaming winnowGate are unchanged by construction.
+  * t29/d20/d21 are unchanged by construction.
   */
 class WindowMinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
 
-/** t25 beyond the oracle — the two properties the histogram sketch exists
+/** t25 beyond the oracle — the properties the histogram sketch exists
   * for:
   *
   *  - ACCURACY CONTRACT: every published quantile upper bound brackets
@@ -17,6 +17,8 @@ import graft.{Tables, TestSpark}
   *    rows as the single pass — the property that makes the sketch
   *    shard-, day-, and stream-composable (t15/t24's discipline on the
   *    quantile front).
+  *  - BOUNDED STATE: bins per group are bounded by the price range, not by
+  *    the row count.
   */
 class HistogramQuantileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -48,5 +50,16 @@ class HistogramQuantileSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
     assert(whole.nonEmpty && viaMerge == whole,
       "bin-count addition over a data split must be indistinguishable from one pass")
+  }
+
+  test("bins per group are bounded by the price range (sf0.001)") {
+    val li = Tables.lineitem(spark, TestSpark.sf0001)
+      .select(col("l_returnflag"), col("l_extendedprice"))
+    val perGroup = T25HistogramQuantiles.histogram(li).groupBy(col("l_returnflag")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(perGroup.nonEmpty)
+    perGroup.foreach { case (g, n) =>
+      assert(n < 1000, s"group $g holds $n bins — range bound broken")
+    }
   }
 }

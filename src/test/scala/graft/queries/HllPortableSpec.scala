@@ -13,6 +13,8 @@ import graft.{Tables, TestSpark}
   *    s_scaled, est_e9) row as the single-pass sketch. This is the property
   *    that makes the operator shard-, day-, and stream-mergeable: the
   *    100-TB deployment never re-scans history, it maxes registers.
+  *  - FIXED STATE — at most m=512 register rows per source, whatever the
+  *    corpus size.
   *  - ACCURACY vs the exact comparator — within the m=512 theory bound
   *    (σ ≈ 1.04/√512 ≈ 4.6%; we assert 3σ ≈ 14%) per source at sf0.01.
   *  - LINEAR-COUNTING BRANCH — a tiny vocabulary must take the V>0 path
@@ -40,6 +42,16 @@ class HllPortableSpec extends AnyFunSuite {
     val viaMerge = estRows(T24HllCardinality.estimate(merged))
     assert(whole.nonEmpty && viaMerge == whole,
       "register max-merge over a corpus split must be indistinguishable from one pass")
+  }
+
+  test("fixed state: at most m=512 register rows per source (sf0.001)") {
+    val docs = Tables.documents(spark, TestSpark.sf0001).select(col("source"), col("text"))
+    val perSource = T24HllCardinality.registers(docs).groupBy(col("source")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(perSource.nonEmpty)
+    perSource.foreach { case (src, n) =>
+      assert(n <= 512, s"$src holds $n register rows > m=512")
+    }
   }
 
   test("estimate within 3-sigma of exact per source at sf0.01") {

@@ -46,6 +46,19 @@ class MarkupStripSpec extends AnyFunSuite {
     }
   }
 
+  test("no tag or script body survives the strip (sf0.001)") {
+    val cleaned = graft.Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id"),
+        T21MarkupStrip.stripCol(T21MarkupStrip.htmlCol(col("doc_id"), col("text"))))
+      .collect()
+    assert(cleaned.nonEmpty)
+    cleaned.foreach { r =>
+      val clean = r.getString(1)
+      assert(!clean.contains("<") && !clean.contains(">"), s"residual tag in doc ${r.getLong(0)}")
+      assert(!clean.contains("var x="), s"script body leaked in doc ${r.getLong(0)}")
+    }
+  }
+
   test("t21 plan is a join-free, shuffle-free projection") {
     val p = T21MarkupStrip.run(spark, TestSpark.sf0001)
       .queryExecution.executedPlan.toString

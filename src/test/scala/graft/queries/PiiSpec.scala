@@ -64,6 +64,19 @@ class PiiSpec extends AnyFunSuite {
     scan(once).foreach { case (_, e, p, i, _) => assert(e + p + i == 0) }
   }
 
+  test("redaction leaves no residual entity on the injected corpus (sf0.001)") {
+    import PiiOps._
+    val redacted = graft.Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id"),
+        redactCol(piiTextCol(col("doc_id"), col("text"), col("source"))))
+      .collect()
+    assert(redacted.nonEmpty)
+    redacted.foreach { r =>
+      for (p <- Seq(emailRe, phoneRe, ipRe))
+        assert(p.r.findFirstIn(r.getString(1)).isEmpty, s"residual match in doc ${r.getLong(0)}")
+    }
+  }
+
   test("t20 and p8 agree on counts and p8's length math is consistent (sf0.001)") {
     val t20 = T20PiiScan.run(spark, TestSpark.sf0001)
       .select("doc_id", "n_pii").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
